@@ -19,4 +19,12 @@ ts timestamp)`` — one row per conversation turn.
 
 __version__ = "0.1.0"
 
-from dataflow_mm_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # lazy: importing the package must not import pyspark, so that
+    # ``python -m dataflow_mm_spark.worker_daemon`` can settle sys.path first
+    if name == "get_spark":
+        from dataflow_mm_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

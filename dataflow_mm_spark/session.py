@@ -5,8 +5,11 @@ Defaults are tuned for correctness-at-scale first:
 * Arrow on for every pandas-UDF exchange;
 * session timezone pinned to UTC so event-time semantics are stable and
   DuckDB-oracle comparisons are reproducible;
-* shuffle partitions sized from the master's core count (4x cores) unless
-  given explicitly — on a real cluster this would come from the job config.
+* the master spark-submit set, else ``local[$SPARK_GRAFT_CPUS]``;
+* shuffle partitions = the master's core count (one task wave per stateful
+  stage) unless given explicitly or by spark-submit;
+* on local masters, Python workers start from ``worker_daemon`` (no per-task
+  re-read of Spark's Python archives).
 """
 
 from __future__ import annotations
@@ -18,6 +21,8 @@ from pyspark.sql import SparkSession
 
 
 def _cores_of(master: str) -> int:
+    if master == "local":
+        return 1
     m = re.match(r"local\[(\d+|\*)\]", master)
     if not m:
         return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -26,19 +31,73 @@ def _cores_of(master: str) -> int:
     return int(m.group(1))
 
 
+def _submitted_conf() -> dict[str, str]:
+    """The ``spark.*`` settings of a driver JVM that spark-submit started
+    before this process; empty when this process launches its own JVM."""
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return {}
+    from pyspark import SparkConf, SparkContext
+
+    SparkContext._ensure_initialized()
+    return dict(SparkConf().getAll())
+
+
+_PYTHONPATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _worker_daemon_conf(master: str, pythonpath: str | None) -> dict[str, str]:
+    """Settings that start Python workers from ``worker_daemon``; empty for
+    non-local masters, whose executors do not share this host's paths.
+
+    The daemon is imported before any task ships ``--py-files``, so the
+    package's own import root (its checkout directory, or the zip it was
+    imported from) goes first on the workers' ``PYTHONPATH``, ahead of
+    ``pythonpath`` (the one the caller already set)."""
+    if not re.fullmatch(r"local(\[.*\])?", master):
+        return {}
+    import dataflow_mm_spark
+
+    root = os.path.dirname(
+        os.path.dirname(os.path.abspath(dataflow_mm_spark.__file__))
+    )
+    paths = [root] + [
+        p for p in (pythonpath or "").split(os.pathsep) if p and p != root
+    ]
+    return {
+        "spark.python.daemon.module": "dataflow_mm_spark.worker_daemon",
+        _PYTHONPATH: os.pathsep.join(paths),
+    }
+
+
 def get_spark(
     app_name: str = "dataflow-mm-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    submitted = _submitted_conf()
+    master = (
+        master
+        or submitted.get("spark.master")
+        or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    )
     cores = _cores_of(master)
     if shuffle_partitions is None:
-        # 1x cores: AQE coalesces batch shuffles anyway, and streaming state
-        # store instances (fixed at shuffle_partitions) stay cheap to commit.
-        # A real multi-executor cluster would size this 2-3x total cores.
-        shuffle_partitions = max(8, cores)
+        # one task wave: every stateful micro-batch stage runs one Python
+        # worker round (and one state-store commit) per core, not two.
+        # AQE coalesces batch shuffles anyway; a real multi-executor cluster
+        # would size this 2-3x total cores through spark-submit.
+        shuffle_partitions = int(
+            submitted.get("spark.sql.shuffle.partitions", cores)
+        )
+    extra_conf = extra_conf or {}
+    daemon = _worker_daemon_conf(
+        master, extra_conf.get(_PYTHONPATH, submitted.get(_PYTHONPATH))
+    )
+    # the caller may pick another daemon module; PYTHONPATH is merged
+    conf = {**daemon, **extra_conf}
+    if daemon:
+        conf[_PYTHONPATH] = daemon[_PYTHONPATH]
 
     b = (
         SparkSession.builder.master(master)
@@ -88,7 +147,7 @@ def get_spark(
         # past the measured crossover (BENCH.md §5)
         .config("spark.sql.streaming.stateStore.providerClass", HDFS_PROVIDER)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

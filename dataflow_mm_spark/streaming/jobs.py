@@ -204,13 +204,15 @@ def cep_pipeline(
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     bucketed: bool = True,
-    buckets: int = 1024,
+    buckets: int = 64,
     sink_mode: str = "exactly_once",
     variant: str | None = None,
 ):
     """Role-alternation + tool-pairing CEP event stream → sink. Default uses
-    the bucketed state layout (per-group constant amortized over ~buckets
-    groups instead of one group per conversation — see cep_stream_bucketed).
+    the bucketed state layout: 64 state groups (hash(conv_id) % buckets)
+    instead of one per conversation, so each micro-batch pays the Python
+    round-trip per bucket, not per conversation (see cep_stream_bucketed).
+    ``buckets`` is fixed for the life of a checkpoint.
     ``variant`` overrides the layout: "tws" selects the
     transformWithStateInPandas form (arbitrary-state v2: per-key RocksDB
     ValueState + event-time close timers — this sets the session's state

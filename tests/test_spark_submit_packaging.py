@@ -108,3 +108,53 @@ def test_spark_submit_py_files_packaging(spark, tiny_transcripts, tmp_path):
     )
     assert r2.returncode == 0, f"resume submit failed:\n{r2.stderr[-4000:]}"
     assert sink.read_committed(spark).count() == n1
+
+    # a Python stateful job (applyInPandasWithState): its local workers start
+    # from dataflow_mm_spark.worker_daemon, which only the --py-files zip holds
+    cep_out = str(tmp_path / "cep_out")
+    cep_cmd = cmd[: cmd.index("--job")] + [
+        "--job", "cep",
+        "--input", inp,
+        "--output", cep_out,
+        "--checkpoint", str(tmp_path / "cep_ck"),
+    ]
+    r3 = subprocess.run(
+        cep_cmd, capture_output=True, text=True, timeout=600,
+        cwd=str(scratch), env=env,
+    )
+    assert r3.returncode == 0, f"cep submit failed:\n{r3.stderr[-4000:]}"
+    assert ExactlyOnceParquetSink(cep_out).read_committed(spark).count() > 0
+
+
+def test_get_spark_keeps_spark_submit_master(tmp_path):
+    """``get_spark()`` under spark-submit uses the submitted master (and
+    sizes shuffle partitions from it) instead of local[$SPARK_GRAFT_CPUS];
+    the master is local, so the worker daemon is selected too."""
+    submit = _spark_submit()
+    if submit is None:
+        pytest.skip("no spark-submit on PATH / SPARK_HOME")
+    import dataflow_mm_spark
+
+    script = tmp_path / "probe.py"
+    script.write_text(
+        "from dataflow_mm_spark.session import get_spark\n"
+        "spark = get_spark('submit-master')\n"
+        "sc = spark.sparkContext\n"
+        "print('PROBE', sc.master,\n"
+        "      spark.conf.get('spark.sql.shuffle.partitions'),\n"
+        "      sc.getConf().get('spark.python.daemon.module'))\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ)
+    env["PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(os.path.abspath(dataflow_mm_spark.__file__)))
+    env["PYSPARK_PYTHON"] = sys.executable
+    env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    r = subprocess.run(
+        [submit, "--master", "local[2]", "--conf", "spark.ui.enabled=false",
+         str(script)],
+        capture_output=True, text=True, timeout=600, cwd=str(tmp_path), env=env,
+    )
+    assert r.returncode == 0, f"spark-submit failed:\n{r.stderr[-4000:]}"
+    probe = [ln for ln in r.stdout.splitlines() if ln.startswith("PROBE")]
+    assert probe == ["PROBE local[2] 2 dataflow_mm_spark.worker_daemon"]

@@ -836,3 +836,72 @@ def test_neardup_state_upgrade_pre_r4_hex():
     new = [["c1#0", [123, 456]]]
     assert _upgrade_entries(new) is new
     assert _upgrade_entries([]) == []
+
+
+def _cep_layout_input(spark, path: str, seed: int) -> None:
+    transcripts(spark, n_convs=30, seed=seed).coalesce(1).write.mode(
+        "append").parquet(path)
+
+
+def test_cep_bucketed_rejects_pre_layout_checkpoint(spark, tmp_path):
+    """A checkpoint written before BUCKET_STATE_SCHEMA recorded its bucket
+    count (state = blob + max ts only) fails at query start instead of
+    re-bucketing its conversations."""
+    from pyspark.sql import types as T
+    from pyspark.sql.streaming import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    from dataflow_mm_spark.streaming.cep import OUTPUT_SCHEMA
+    from dataflow_mm_spark.streaming.source import read_transcript_stream
+
+    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _cep_layout_input(spark, inp, seed=1)
+    old_state = T.StructType([
+        T.StructField("convs_blob", T.StringType()),
+        T.StructField("max_ts_us", T.LongType()),
+    ])
+
+    def old_fn(key, pdf_iter, state):
+        for _ in pdf_iter:
+            pass
+        state.update(("", 0))
+        return iter(())
+
+    old = (
+        read_transcript_stream(spark, inp, None, "10 minutes")
+        .select("conv_id", "ts",
+                F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("_bucket"))
+        .groupBy("_bucket")
+        .applyInPandasWithState(old_fn, OUTPUT_SCHEMA, old_state, "append",
+                                GroupStateTimeout.EventTimeTimeout)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch(
+            lambda df, bid: df.write.format("noop").mode("overwrite").save())
+        .trigger(availableNow=True)
+        .start()
+    )
+    old.awaitTermination(300)
+    assert old.exception() is None
+
+    _cep_layout_input(spark, inp, seed=2)
+    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=8)
+    with pytest.raises(StreamingQueryException,
+                       match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        q.awaitTermination(300)
+
+
+def test_cep_bucketed_resume_with_other_buckets_raises(spark, tmp_path):
+    """Resuming a bucketed CEP checkpoint with a different ``buckets`` raises
+    CepStateLayoutError rather than restarting the re-bucketed FSMs."""
+    from pyspark.sql.streaming import StreamingQueryException
+
+    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
+    _cep_layout_input(spark, inp, seed=1)
+    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=8)
+    q.awaitTermination(300)
+    assert q.exception() is None
+
+    _cep_layout_input(spark, inp, seed=2)
+    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=16)
+    with pytest.raises(StreamingQueryException, match="CepStateLayoutError"):
+        q.awaitTermination(300)
