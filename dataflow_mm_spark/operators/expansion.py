@@ -16,8 +16,6 @@ Reference analogues (SURVEY.md §2.7):
 
 from __future__ import annotations
 
-
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -70,25 +68,22 @@ def merge_spans_capped(
     start_col: str = "span_start",
     end_col: str = "span_end",
     max_duration: float = 30.0,
-    group_buckets: int | None = None,
 ) -> DataFrame:
     """Merge mode: per key in span order, greedily accumulate consecutive
     spans while merged duration (last.end - first.start) ≤ max_duration;
     otherwise start a new sequence. Emits one row per merged sequence:
-    (keys..., sequence_num, merged_start, merged_end, n_spans).
+    (keys..., sequence_num, merged_start, merged_end, n_spans). NULL key
+    values form a group of their own.
 
-    Cumulative cut rule → ordered applyInPandas per key (the reference runs
-    the same loop per row in a process pool). The streaming stateful form is
+    Cumulative cut rule → ordered applyInPandas (the reference runs the same
+    loop per row in a process pool). The streaming stateful form is
     streaming/merge.py:merge_spans_stream — same greedy core, parity-tested.
 
-    ``group_buckets``: when set, applyInPandas groups on ``hash(keys) %
-    group_buckets`` and walks each key inside the pandas frame — one
-    Python/Arrow round-trip per BUCKET instead of per key (~2 ms each;
-    1.6k singleton key groups cost ~3 s of pure round-trip at sf0.1, r6).
-    Same output rows.  Leave None (per-key grouping) when per-bucket span
-    volume could exceed executor memory — the caller knows its key
-    cardinality/row ratio; bucketed mode holds a whole bucket's spans in
-    one pandas frame."""
+    applyInPandas groups on ``hash(keys) % (8 × defaultParallelism)`` and
+    walks each key inside the pandas frame — one Python/Arrow round trip per
+    bucket instead of per key (~2 ms each; 1.6k singleton key groups cost
+    ~3 s of pure round trip at sf0.1, r6). A bucket's spans are held in one
+    pandas frame."""
     # key columns keep their INPUT types (a long user_id key must not be
     # declared string — Arrow would fail the batch at runtime)
     in_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -98,40 +93,20 @@ def merge_spans_capped(
     )
     out_cols = [*key_cols, "sequence_num", "merged_start", "merged_end", "n_spans"]
 
-    if group_buckets:
-        def merge_bucketed(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = []
-            for keys, g in pdf.groupby(list(key_cols), sort=False):
-                if not isinstance(keys, tuple):
-                    keys = (keys,)
-                rows.extend(
-                    [*keys, seq, s, e, n]
-                    for seq, s, e, n in greedy_merge_spans(
-                        zip(g[start_col], g[end_col]), max_duration
-                    )
-                )
-            return pd.DataFrame(rows, columns=out_cols)
-
-        bucket = F.pmod(
-            F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(group_buckets)
-        )
-        return (
-            df.withColumn("_mb", bucket)
-            .groupBy("_mb")
-            .applyInPandas(merge_bucketed, out_schema)
-        )
-
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = [pdf[k].iloc[0] for k in key_cols]
-        rows = [
-            [*keys, seq, s, e, n]
-            for seq, s, e, n in greedy_merge_spans(
-                zip(pdf[start_col], pdf[end_col]), max_duration
+        rows = []
+        for keys, g in pdf.groupby(list(key_cols), sort=False, dropna=False):
+            rows.extend(
+                [*keys, seq, s, e, n]
+                for seq, s, e, n in greedy_merge_spans(
+                    zip(g[start_col], g[end_col]), max_duration
+                )
             )
-        ]
         return pd.DataFrame(rows, columns=out_cols)
 
-    return df.groupBy(*key_cols).applyInPandas(merge, out_schema)
+    buckets = 8 * df.sparkSession.sparkContext.defaultParallelism
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(buckets))
+    return df.withColumn("_mb", bucket).groupBy("_mb").applyInPandas(merge, out_schema)
 
 
 def sample_points(

@@ -308,10 +308,6 @@ def events_merge_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merge_spans_capped(
         spans, key_cols=("user_id",),
         start_col="span_start", end_col="span_end", max_duration=30.0,
-        # ~8 rows per bucket per core at gate scale: one Python round-trip
-        # per bucket instead of per user (r6; spans/key is tiny here, so
-        # bucketed memory is bounded)
-        group_buckets=8 * spark.sparkContext.defaultParallelism,
     )
 
 
@@ -3502,8 +3498,8 @@ def _sentineled_turns_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 def transcripts_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 stateful CEP under the value-hash gate: the REAL bucketed CEP
-    FSM (`cep_stream_bucketed` — applyInPandasWithState over hash buckets,
-    segment-encoded state, event-time close) drains availableNow over the
+    FSM (`cep_stream_bucketed` — per-conversation FSMs in
+    streaming/keyed_state.py, event-time close) drains availableNow over the
     portable synthetic turns; a far-future sentinel closes every
     conversation so trailing unpaired tool calls emit. The committed
     role-violation and tool-pairing events hash-compare to the closed-form

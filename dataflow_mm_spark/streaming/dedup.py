@@ -10,25 +10,16 @@
   events against remembered rows whose signature agrees on ≥ ``min_frac`` of
   the minhashes. Append-mode stateful op → candidates feed a downstream
   foreachBatch dedup decision.
-
-Checkpoint compatibility: state entries hold 60-bit BIGINT signature lists
-since r4 (previously hex-digest strings). Resuming a pre-r4 checkpoint is
-handled by converting str-typed entries in place (``int(hex[:15], 16)`` —
-the same prefix law as the live path), so old state keeps matching instead
-of silently never matching.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dataflow_mm_spark.functions.dedup import (
     minhash_band_keys,
@@ -36,6 +27,7 @@ from dataflow_mm_spark.functions.dedup import (
     norm_words,
     shingles_of_words,
 )
+from dataflow_mm_spark.streaming.keyed_state import keyed_state_stream
 
 CAND_SCHEMA = T.StructType(
     [
@@ -53,20 +45,9 @@ CAND_SCHEMA = T.StructType(
 _VEC_MIN = 16
 
 
-def _upgrade_entries(entries: list[list]) -> list[list]:
-    """Pre-r4 checkpoints stored hex-digest signature lists; convert via
-    the same 60-bit prefix law the live path uses (int(hex[:15], 16)), so
-    resumed state keeps matching instead of silently never matching."""
-    if entries and isinstance(entries[0][1][0], str):
-        return [[k, [int(h[:15], 16) for h in sig]] for k, sig in entries]
-    return entries
-
-BUCKET_STATE = T.StructType(
-    [
-        T.StructField("entries_json", T.StringType()),
-        T.StructField("last_ms", T.LongType()),
-    ]
-)
+# keyed_state layout: one segment per LSH bucket, payload = json
+# [last_ms, [[row_key, sig], ...]] (the bucket's keep-first memory)
+_LAYOUT_VERSION = 1
 
 
 def exact_dedup_stream(turns: DataFrame) -> DataFrame:
@@ -93,20 +74,18 @@ def neardup_candidates_stream(
     ``key_new`` is an arrival of the same micro-batch, so
     ``decisions_from_batch`` can grade each arrival inside foreachBatch.
 
-    State layout (r6): the stateful op groups on ``hash(bucket) %
-    state_buckets`` (the cep_stream_bucketed device) instead of one state
-    group per LSH bucket.  Per-group Python/Arrow/GroupState round-trip
-    overhead is ~10 ms regardless of group size (measured: a 25.7k-row gate
-    batch fanning into 11.6k singleton bucket groups spent 148 s of summed
-    update time — nearly all round-trip, not compare work), so amortizing
-    ~tens of buckets per group cuts the stateful stage's wall ~5-10x while
-    per-bucket semantics (event-time order, keep-first memory, TTL
-    eviction, max_entries ring) are preserved exactly — each bucket inside
-    the group keeps its own entry list and last-event time, and the group
-    timer fires at the MINIMUM per-bucket deadline, evicting only expired
-    buckets.  Resuming a pre-r6 checkpoint fails loudly at query start
-    (state key schema changed from the bucket string to the int group id) —
-    restart from a fresh checkpoint."""
+    State: one keyed_state segment per LSH bucket, grouped on
+    ``hash(bucket) % state_buckets`` (streaming/keyed_state.py). Per-group
+    Python/Arrow/GroupState round-trip overhead is ~10 ms regardless of
+    group size (measured: a 25.7k-row gate batch fanning into 11.6k
+    singleton bucket groups spent 148 s of summed update time — nearly all
+    round-trip, not compare work), so amortizing ~tens of buckets per group
+    cuts the stateful stage's wall ~5-10x while per-bucket semantics
+    (event-time order, keep-first memory, TTL eviction, max_entries ring)
+    are preserved exactly. A bucket's deadline is its last event time +
+    ``ttl_minutes``; once the watermark passes it the bucket is evicted.
+    ``state_buckets`` is fixed for the life of a checkpoint: resuming with
+    another value raises keyed_state.StateLayoutError."""
     rows = num_hashes // bands
     keyed = turns.select(
         F.concat_ws("#", *key_cols).alias("row_key"),
@@ -143,90 +122,42 @@ def neardup_candidates_stream(
         F.concat_ws("/", F.col("bk.band").cast("string"), F.col("bk.key")).alias(
             "bucket"
         ),
-    ).select(
-        "*",
-        F.pmod(F.xxhash64("bucket"), F.lit(state_buckets)).cast("int").alias("g"),
     )
-    ttl_ms = ttl_minutes * 60_000
+    ttl_us = ttl_minutes * 60_000_000
+    exact = min_frac >= 1.0
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut:
-            # evict only the EXPIRED buckets of this group (per-bucket TTL
-            # semantics of the pre-r6 one-group-per-bucket layout), re-arm
-            # the timer at the next-earliest deadline
-            st = json.loads(state.get[0]) if state.exists else {}
-            st = {b: v for b, v in st.items() if v[0] + ttl_ms > wm}
-            if st:
-                lasts = [v[0] for v in st.values()]
-                state.update((json.dumps(st), max(lasts)))
-                state.setTimeoutTimestamp(max(min(lasts) + ttl_ms, wm + 1000))
-            else:
-                state.remove()
-            return  # nothing to emit — skip the empty-frame alloc
-        # state value: {bucket: [last_ms, entries]}
-        st: dict[str, list] = json.loads(state.get[0]) if state.exists else {}
-        out = []
+    def decode(pdf):
         # vectorized row extraction: per-row pd.Timestamp/itertuples cost
-        # ~2 ms/row at scale; the ns int preserves the exact event-time
-        # order. "first seen" stays deterministic via the (ts, row_key)
-        # sort — stable, so per-bucket subsequence order is unchanged.
-        rows: list[tuple] = []
-        for pdf in pdf_iter:
-            if not len(pdf):
-                continue
-            ns = pdf["ts"].to_numpy("datetime64[ns]").astype("int64")
-            rows.extend(
-                zip(
-                    ns.tolist(),
-                    pdf["row_key"].tolist(),
-                    pdf["sig"].tolist(),
-                    pdf["band"].tolist(),
-                    pdf["bucket"].tolist(),
-                )
-            )
+        # ~2 ms/row at scale; the ns int preserves the exact event-time order
+        ns = pdf["ts"].to_numpy("datetime64[ns]").astype("int64")
+        return zip(
+            ns.tolist(),
+            pdf["row_key"].tolist(),
+            pdf["sig"].tolist(),
+            pdf["band"].tolist(),
+        )
+
+    def step(_bucket, payload, rows, out):
+        last_ms, entries = json.loads(payload) if payload else (0, [])
+        keys = [e[0] for e in entries]
+        seen_keys = set(keys)
+        n = len(entries)
+        # hybrid candidate scan (r4 judge #4): a DENSE bucket
+        # (n >= _VEC_MIN) compares via one numpy pass over an
+        # incrementally-filled (n, num_hashes) int64 matrix; SPARSE buckets
+        # (the common LSH regime, occupancy 1-2) keep the short Python loop,
+        # A/B measured faster below ~16 entries (BENCH.md §7). The matrix is
+        # only allocated when the bucket can go dense this batch.
+        M = None
+        if n + len(rows) >= _VEC_MIN:
+            M = np.empty((n + len(rows), num_hashes), dtype=np.int64)
+            if n:
+                M[:n] = np.asarray([e[1] for e in entries], dtype=np.int64)
+        # "first seen" is deterministic via the (ts, row_key) order
         rows.sort(key=lambda r: (r[0], r[1]))
-        # incoming tally sizes each dense bucket's matrix up front
-        inc: dict[str, int] = {}
-        for r in rows:
-            inc[r[4]] = inc.get(r[4], 0) + 1
-        exact = min_frac >= 1.0
-        # per-bucket working set: [keys, entries, seen, M|None, n, last_ms]
-        work: dict[str, list] = {}
-
-        def load(b: str) -> list:
-            w = work.get(b)
-            if w is None:
-                ent = st.get(b)
-                entries = _upgrade_entries(ent[1]) if ent else []
-                keys = [e[0] for e in entries]
-                n = len(entries)
-                # hybrid candidate scan (r4 judge #4): a DENSE bucket
-                # (n >= _VEC_MIN) compares via one numpy pass over an
-                # incrementally-filled (n, num_hashes) int64 matrix; SPARSE
-                # buckets (the common LSH regime, occupancy 1-2) keep the
-                # short Python loop, A/B measured faster below ~16 entries
-                # (BENCH.md §7).  The matrix is only allocated when the
-                # bucket can go dense this batch.
-                M = None
-                if n + inc[b] >= _VEC_MIN:
-                    M = np.empty((n + inc[b], num_hashes), dtype=np.int64)
-                    if n:
-                        M[:n] = np.asarray(
-                            [e[1] for e in entries], dtype=np.int64
-                        )
-                w = [keys, entries, set(keys), M, n,
-                     ent[0] if ent else 0]
-                work[b] = w
-            return w
-
-        for ns_i, row_key, sig, band, b in rows:
+        for ns_i, row_key, sig, band in rows:
             if emit_arrivals and int(band) == 0:
                 out.append((row_key, None, 0, 0.0))
-            w = load(b)
-            keys, entries, seen_keys, M, n = w[0], w[1], w[2], w[3], w[4]
             is_dup = False
             s: list[int] | None = None
             if 0 < n < _VEC_MIN:
@@ -269,29 +200,24 @@ def neardup_candidates_stream(
                 entries.append([row_key, s if s is not None
                                 else [int(x) for x in sig]])
                 seen_keys.add(row_key)
-                w[4] = n + 1
+                n += 1
             ms = ns_i // 1_000_000
-            if ms > w[5]:
-                w[5] = ms
-        for b, w in work.items():
-            entries = w[1]
-            if len(entries) > max_entries:
-                entries = entries[-max_entries:]
-            st[b] = [w[5], entries]
-        lasts = [v[0] for v in st.values()]
-        state.update((json.dumps(st), max(lasts) if lasts else 0))
-        state.setTimeoutTimestamp(
-            max((min(lasts) if lasts else 0) + ttl_ms, wm + 1000)
-        )
-        if out:
-            yield pd.DataFrame(out, columns=["key_new", "key_seen", "band", "sig_agree"])
+            if ms > last_ms:
+                last_ms = ms
+        return json.dumps([last_ms, entries[-max_entries:]]), last_ms * 1000 + ttl_us
 
-    return keyed.groupBy("g").applyInPandasWithState(
-        fn,
-        outputStructType=CAND_SCHEMA,
-        stateStructType=BUCKET_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def close(_bucket, _payload, _wm_us, _out):
+        return None  # TTL: the bucket's newest entry is older than ttl_minutes
+
+    return keyed_state_stream(
+        keyed,
+        "bucket",
+        version=_LAYOUT_VERSION,
+        buckets=state_buckets,
+        decode=decode,
+        step=step,
+        close=close,
+        output_schema=CAND_SCHEMA,
     )
 
 

@@ -3,7 +3,8 @@ streaming operator (reference semantics:
 audio_timestamp_chunk_row_generator.py:29-55 merge mode).
 
 Per key (``conv_id``), timestamped spans (span_start/span_end seconds within
-the conversation, ``ts`` event time) are buffered in state; when the
+the conversation, ``ts`` event time) are buffered in keyed state
+(streaming/keyed_state.py, 64 buckets); when the
 watermark passes the key's last activity + ``close_gap`` the buffered spans
 are sorted and run through the SAME greedy size-capped merge loop as the
 batch operator (operators/expansion.greedy_merge_spans — single source), and
@@ -22,15 +23,13 @@ same as for windows (see BENCH.md skew section).
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from dataflow_mm_spark.operators.expansion import greedy_merge_spans
 from dataflow_mm_spark.streaming.cep import _parse_gap_us
+from dataflow_mm_spark.streaming.keyed_state import keyed_state_stream
 
 MERGE_OUTPUT_SCHEMA = T.StructType(
     [
@@ -42,14 +41,9 @@ MERGE_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-MERGE_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("spans_json", T.StringType()),
-        T.StructField("max_ts_us", T.LongType()),
-    ]
-)
-
-_COLS = ["conv_id", "sequence_num", "merged_start", "merged_end", "n_spans"]
+# keyed_state layout: payload = json [max_ts_us, [[start, end], ...]]
+_LAYOUT_VERSION = 1
+_BUCKETS = 64
 
 
 def merge_spans_stream(
@@ -64,47 +58,36 @@ def merge_spans_stream(
     (parity-tested in tests/test_streaming.py)."""
     gap_us = _parse_gap_us(close_gap)
 
-    def fn(
-        key: tuple, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            pairs = json.loads(state.get[0])
-            state.remove()
-            rows = [
-                (key[0], seq, s, e, n)
-                for seq, s, e, n in greedy_merge_spans(pairs, max_duration)
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=_COLS)
-            return
-        pairs = json.loads(state.get[0]) if state.exists else []
-        max_ts_us = state.get[1] if state.exists else 0
-        for pdf in pdf_iter:
-            ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-            pairs += [
-                [float(s), float(e)]
-                for s, e in zip(pdf["span_start"], pdf["span_end"])
-            ]
-            if len(ts_us):
-                m = int(ts_us.max())
-                if m > max_ts_us:
-                    max_ts_us = m
-        state.update((json.dumps(pairs), max_ts_us))
-        state.setTimeoutTimestamp(
-            max(
-                max_ts_us // 1000 + gap_us // 1000,
-                state.getCurrentWatermarkMs() + 1000,
-            )
+    def decode(pdf):
+        ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
+        return zip(
+            pdf["span_start"].tolist(),
+            pdf["span_end"].tolist(),
+            ts_us.tolist(),
         )
 
-    return (
-        spans.select("conv_id", "span_start", "span_end", "ts")
-        .groupBy("conv_id")
-        .applyInPandasWithState(
-            fn,
-            outputStructType=MERGE_OUTPUT_SCHEMA,
-            stateStructType=MERGE_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    def step(_cid, payload, rows, out):
+        max_ts_us, pairs = json.loads(payload) if payload else (0, [])
+        for s, e, ts_us in rows:
+            pairs.append([s, e])
+            if ts_us > max_ts_us:
+                max_ts_us = ts_us
+        return json.dumps([max_ts_us, pairs]), max_ts_us + gap_us
+
+    def close(cid, payload, _wm_us, out):
+        out.extend(
+            (cid, seq, s, e, n)
+            for seq, s, e, n in greedy_merge_spans(json.loads(payload)[1], max_duration)
         )
+        return None
+
+    return keyed_state_stream(
+        spans.select("conv_id", "span_start", "span_end", "ts"),
+        "conv_id",
+        version=_LAYOUT_VERSION,
+        buckets=_BUCKETS,
+        decode=decode,
+        step=step,
+        close=close,
+        output_schema=MERGE_OUTPUT_SCHEMA,
     )

@@ -52,21 +52,24 @@ def test_merge_spans_capped(spark, spans):
 
 def test_merge_spans_capped_nonstring_key(spark):
     """Key columns keep their input types — a long key must not be declared
-    string in the applyInPandas output schema (latent Arrow type error)."""
+    string in the applyInPandas output schema (latent Arrow type error).
+    NULL keys form a group of their own."""
     df = spark.createDataFrame(
-        [(7, 0.0, 5.0), (7, 6.0, 12.0), (7, 50.0, 60.0)],
+        [(7, 0.0, 5.0), (7, 6.0, 12.0), (7, 50.0, 60.0),
+         (None, 1.0, 2.0), (None, 3.0, 4.0)],
         "user_id long, span_start double, span_end double",
     )
     rows = (
         E.merge_spans_capped(df, key_cols=("user_id",), max_duration=30.0)
-        .orderBy("sequence_num")
+        .orderBy("user_id", "sequence_num")
         .collect()
     )
     assert [(r.user_id, r.sequence_num, r.n_spans) for r in rows] == [
+        (None, 0, 2),
         (7, 0, 2),
         (7, 1, 1),
     ]
-    assert dict(rows[0].asDict())["user_id"] == 7
+    assert dict(rows[1].asDict())["user_id"] == 7
 
 
 def test_sample_points(spark, spans):

@@ -71,47 +71,15 @@ def test_exact_dedup_stream_removes_duplicates(spark, tmp_path):
     assert n == nd > 0
 
 
-import pytest
-
-
-from dataflow_mm_spark.streaming.cep import tws_available
-
-
-@pytest.mark.parametrize(
-    "variant",
-    [
-        "perconv",
-        "bucketed",
-        pytest.param(
-            "tws",
-            marks=pytest.mark.skipif(
-                not tws_available(),
-                reason="transformWithStateInPandas needs the protobuf package "
-                "(absent in this sandbox; path is import-gated — see "
-                "cep.tws_available)",
-            ),
-        ),
-    ],
-    ids=["per-conv", "bucketed", "tws"],
-)
-def test_cep_stream_matches_batch(spark, tmp_path, variant):
+@pytest.mark.parametrize("buckets", [32, 1], ids=["bucketed", "one-bucket"])
+def test_cep_stream_matches_batch(spark, tmp_path, buckets):
+    """Detections equal the batch operators'. With one bucket every
+    conversation shares one state blob, so closes happen in the sweep of a
+    data call rather than on a bucket's own timer."""
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     df = _write_input(spark, inp, n_convs=60)
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    try:
-        q, sink = jobs.cep_pipeline(
-            spark, inp, out, ckpt, buckets=32, variant=variant
-        )
-        q.awaitTermination(600)
-    finally:
-        if prev_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
+    q, sink = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=buckets)
+    q.awaitTermination(600)
     got = sink.read_committed(spark).filter(F.col("conv_id") != "conv-sentinel")
 
     viol_s = {
@@ -424,13 +392,14 @@ def test_streaming_quality_windows_matches_oracled_batch_query(spark, tmp_path):
     assert got == want and len(want) > 100
 
 
-@pytest.mark.parametrize("bucketed", [False, True], ids=["per-conv", "bucketed"])
-def test_cep_close_then_resume_continues_fsm(spark, tmp_path, bucketed):
+@pytest.mark.parametrize("buckets", [8, 1], ids=["bucketed", "one-bucket"])
+def test_cep_close_then_resume_continues_fsm(spark, tmp_path, buckets):
     """Regression (round-2 review): a conversation that RESUMES after its
     close must continue the FSM from its tombstone — cross-gap role
     alternation and post-close detections stay batch-exact, and each activity
     epoch gets its own summary. Before the fix the resumed turns wedged in
-    pending forever (FSM restarted at turn 0)."""
+    pending forever (FSM restarted at turn 0). With one bucket the pusher
+    conversation shares A's blob, so A closes in the sweep of a data call."""
     import time as _time
 
     T = dt.datetime(2025, 1, 1)
@@ -466,8 +435,7 @@ def test_cep_close_then_resume_continues_fsm(spark, tmp_path, bucketed):
 
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ck")
     q, sink = jobs.cep_pipeline(
-        spark, inp, out, ckpt, bucketed=bucketed, buckets=8,
-        max_files_per_trigger=1,
+        spark, inp, out, ckpt, buckets=buckets, max_files_per_trigger=1,
     )
     q.awaitTermination(600)
     got = sink.read_committed(spark).filter(F.col("conv_id") == "A")
@@ -539,156 +507,102 @@ def test_drain_resumable_restarts_from_checkpoint_once():
     assert calls["n"] == 2 and all(q.stopped for q in hung)
 
 
-# --- transformWithStateInPandas processor glue (runs WITHOUT protobuf) ------
-# The TWS runtime itself needs google.protobuf (absent here — the stream
-# parity param above is skip-gated), but the processor's state pack/unpack,
-# timer-retarget discipline, close/tombstone/retention logic are pure Python:
-# drive them with fakes and pin the behavior to the same FSM semantics the
-# per-conv/bucketed parity tests pin on Spark.
+# --- keyed_state per-bucket function, driven with a fake GroupState --------
 
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
+class _FakeGroupState:
+    def __init__(self, wm_ms, value=None):
+        self.wm_ms, self.value, self.timeout = wm_ms, value, None
 
+    @property
     def exists(self):
-        return self.v is not None
+        return self.value is not None
 
+    @property
     def get(self):
-        return self.v
+        return self.value
+
+    def getCurrentWatermarkMs(self):
+        return self.wm_ms
 
     def update(self, v):
-        self.v = tuple(v)
+        self.value = tuple(v)
 
-    def clear(self):
-        self.v = None
+    def remove(self):
+        self.value = None
 
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = set()
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ts):
-        self.timers.add(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.discard(ts)
-
-    def listTimers(self):
-        return iter(sorted(self.timers))
+    def setTimeoutTimestamp(self, ms):
+        self.timeout = ms
 
 
-class _FakeTimerValues:
-    def __init__(self, wm_ms):
-        self._wm = wm_ms
-
-    def getCurrentWatermarkInMs(self):
-        return self._wm
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._wm
-
-
-def _turns_pdf(rows):
+def test_keyed_state_bucket_fn():
+    """Touched keys step, untouched keys past their deadline close, every
+    other segment rides through verbatim, the timer sits at the minimum
+    deadline, and a layout mismatch raises StateLayoutError."""
     import pandas as pd
 
-    return pd.DataFrame(
-        rows, columns=["turn_idx", "role", "tool", "has_call", "ts"]
+    from dataflow_mm_spark.streaming.keyed_state import (
+        SEG_SEP,
+        StateLayoutError,
+        bucket_fn,
     )
 
+    calls = []
 
-def test_cep_tws_processor_glue():
-    import pandas as pd
+    def step(k, payload, rows, out):
+        # payload = running sum; deadline = that many seconds
+        calls.append(("step", k))
+        total = int(payload or 0) + sum(rows)
+        return str(total), total * 1_000_000
 
-    from dataflow_mm_spark.streaming.cep import _CepProcessor
+    def close(k, payload, wm_us, out):
+        calls.append(("close", k))
+        out.append((k, int(payload)))
+        return None
 
-    gap_us = 60_000_000  # 1 minute
-    p = _CepProcessor(gap_us)
-    h = _FakeHandle()
-    p.init(h)
-    t0 = pd.Timestamp("2026-01-01 00:00:00")
-
-    def ts(s):
-        return t0 + pd.Timedelta(seconds=s)
-
-    # batch 0: out-of-order arrival (turn 2 before turn 1), open tool call
-    out0 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([
-                (0, "user", None, False, ts(0)),
-                (2, "tool", "search", False, ts(20)),  # buffered (gap)
-                (1, "assistant", "search", True, ts(10)),
-            ])]),
-            _FakeTimerValues(0),
+    def run(state, rows=(), buckets=4, version=1):
+        fn = bucket_fn("k", version, buckets, lambda pdf: pdf["v"].tolist(),
+                       step, close, ["k", "v"])
+        calls.clear()
+        pdfs = [pd.DataFrame(rows, columns=["k", "v"])] if rows else []
+        return sorted(
+            tuple(r) for df in fn((0,), iter(pdfs), state)
+            for r in df.itertuples(index=False)
         )
-    )
-    ev0 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out0[0].iterrows()]
-    assert ("c1", "tool_paired", 1) in ev0  # gap filled within the batch
-    assert len(h.timers) == 1  # exactly one live timer
-    (t_close,) = h.timers
-    assert t_close == ts(20).value // 10**6 + 60_000  # last activity + gap
 
-    # batch 1: duplicate of a consumed turn is dropped; same-role violation
-    out1 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([
-                (1, "assistant", "search", True, ts(10)),  # stale dup
-                (3, "user", None, False, ts(30)),
-                (4, "user", None, False, ts(40)),  # role violation
-            ])]),
-            _FakeTimerValues(5_000),
-        )
-    )
-    ev1 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out1[0].iterrows()]
-    assert ev1 == [("c1", "role_violation", 4)]
-    assert len(h.timers) == 1  # retargeted, old timer deleted
-    (t_close1,) = h.timers
-    assert t_close1 == ts(40).value // 10**6 + 60_000
+    st = _FakeGroupState(wm_ms=0)
+    assert run(st, [("a", 5), ("b", 20), ("a", 5), (None, 30)]) == []
+    assert sorted(calls, key=str) == sorted(
+        [("step", "a"), ("step", "b"), ("step", None)], key=str)
+    assert st.get[1:] == (1, 4)
+    assert st.timeout == 10_000  # a's deadline: 10 s
 
-    # close: watermark passes last activity + gap -> summary emitted,
-    # tombstone kept, retention timer registered
-    wm_close = ts(40).value // 10**6 + 61_000
-    outc = list(
-        p.handleExpiredTimer(("c1",), _FakeTimerValues(wm_close), None)
-    )
-    kinds = [r["kind"] for _, r in outc[0].iterrows()]
-    assert kinds == ["conv_summary"]
-    import json as _json
+    # verbatim carry: a, b and the NULL key are untouched and not due
+    before = set(st.get[0].split(SEG_SEP))
+    st.wm_ms = 5_000
+    assert run(st, [("c", 12)]) == []
+    assert calls == [("step", "c")]
+    assert before < set(st.get[0].split(SEG_SEP))
+    assert st.timeout == 10_000
 
-    summary = _json.loads(outc[0].iloc[0]["detail"])
-    assert summary["n_turns"] == 5 and summary["n_violations"] == 1
-    assert summary["n_paired"] == 1 and summary["n_unpaired"] == 0
-    assert h.state.exists()  # tombstone retained
-    assert len(h.timers) == 1  # retention timer
+    # deadline sweep in a data call: a (10 s) and c (12 s) are past the
+    # 15 s watermark; d steps to 1 s and closes in the same call
+    st.wm_ms = 15_000
+    assert run(st, [("d", 1)]) == [("a", 10), ("c", 12), ("d", 1)]
+    assert st.timeout == 20_000  # b is next
 
-    # resume after close: FSM continues (turn 5 'user' vs tombstone
-    # last_ua_role 'user' -> violation), counters restarted
-    out2 = list(
-        p.handleInputRows(
-            ("c1",),
-            iter([_turns_pdf([(5, "user", None, False, ts(100))])]),
-            _FakeTimerValues(wm_close),
-        )
-    )
-    ev2 = [tuple(r[["conv_id", "kind", "turn_idx"]]) for _, r in out2[0].iterrows()]
-    assert ev2 == [("c1", "role_violation", 5)]
+    # timeout call (no rows): b closes, the NULL key is carried
+    st.wm_ms = 25_000
+    assert run(st) == [("b", 20)]
+    assert st.timeout == 30_000
+    st.wm_ms = 31_000
+    assert run(st) == [(None, 30)]
+    assert not st.exists  # no keys left: state removed
 
-    # second close, then retention expiry with watermark far beyond:
-    # state fully removed
-    wm2 = ts(100).value // 10**6 + 61_000
-    list(p.handleExpiredTimer(("c1",), _FakeTimerValues(wm2), None))
-    assert h.state.exists()  # tombstone again
-    wm3 = ts(100).value // 10**6 + 10 * 60_000
-    out3 = list(p.handleExpiredTimer(("c1",), _FakeTimerValues(wm3), None))
-    assert out3 == [] and not h.state.exists()
-
-    # expired timer for a key with no state is a no-op
-    assert list(p.handleExpiredTimer(("cX",), _FakeTimerValues(wm3), None)) == []
+    # layout: another bucket count or payload version is rejected
+    run(st, [("a", 100)])
+    for buckets, version in ((8, 1), (4, 2)):
+        with pytest.raises(StateLayoutError, match="state layout"):
+            run(st, [("a", 1)], buckets=buckets, version=version)
 
 
 # --- sink snapshots: time travel + compaction (Iceberg-manifest miniature) --
@@ -821,32 +735,15 @@ def test_cep_bucketed_tolerates_null_text(spark, tmp_path):
     assert ("tool_paired", 4) in kinds or ("tool_paired", 3) in kinds
 
 
-def test_neardup_state_upgrade_pre_r4_hex():
-    """Pre-r4 checkpoints stored hex signature lists; the state decode must
-    convert them with the 60-bit prefix law (int(hex[:15], 16)) so resumed
-    state keeps matching (r4 ADVICE: silent never-match otherwise)."""
-    from dataflow_mm_spark.streaming.dedup import _upgrade_entries
-
-    hexsig = ["ab" * 16, "0f" * 16]
-    old = [["c1#0", hexsig]]
-    up = _upgrade_entries(old)
-    assert up[0][0] == "c1#0"
-    assert up[0][1] == [int(h[:15], 16) for h in hexsig]
-    # already-migrated int state passes through untouched (same object)
-    new = [["c1#0", [123, 456]]]
-    assert _upgrade_entries(new) is new
-    assert _upgrade_entries([]) == []
-
-
 def _cep_layout_input(spark, path: str, seed: int) -> None:
     transcripts(spark, n_convs=30, seed=seed).coalesce(1).write.mode(
         "append").parquet(path)
 
 
 def test_cep_bucketed_rejects_pre_layout_checkpoint(spark, tmp_path):
-    """A checkpoint written before BUCKET_STATE_SCHEMA recorded its bucket
-    count (state = blob + max ts only) fails at query start instead of
-    re-bucketing its conversations."""
+    """Checkpoints written by the earlier bucketed CEP state layouts (blob +
+    max ts, then blob + max ts + bucket count) fail at query start with
+    Spark's state-schema error instead of being re-read as keyed state."""
     from pyspark.sql import types as T
     from pyspark.sql.streaming import StreamingQueryException
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -854,54 +751,66 @@ def test_cep_bucketed_rejects_pre_layout_checkpoint(spark, tmp_path):
     from dataflow_mm_spark.streaming.cep import OUTPUT_SCHEMA
     from dataflow_mm_spark.streaming.source import read_transcript_stream
 
-    inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
-    _cep_layout_input(spark, inp, seed=1)
-    old_state = T.StructType([
-        T.StructField("convs_blob", T.StringType()),
-        T.StructField("max_ts_us", T.LongType()),
-    ])
+    blob = [T.StructField("convs_blob", T.StringType()),
+            T.StructField("max_ts_us", T.LongType())]
+    layouts = [blob, blob + [T.StructField("layout_buckets", T.IntegerType())]]
+    for i, fields in enumerate(layouts):
+        old_state = T.StructType(fields)
+        inp, out, ckpt = (str(tmp_path / f"{d}{i}") for d in ("in", "out", "ck"))
+        _cep_layout_input(spark, inp, seed=1)
 
-    def old_fn(key, pdf_iter, state):
-        for _ in pdf_iter:
-            pass
-        state.update(("", 0))
-        return iter(())
+        def old_fn(key, pdf_iter, state, n=len(fields)):
+            for _ in pdf_iter:
+                pass
+            state.update(("", 0, 8)[:n])
+            return iter(())
 
-    old = (
-        read_transcript_stream(spark, inp, None, "10 minutes")
-        .select("conv_id", "ts",
-                F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("_bucket"))
-        .groupBy("_bucket")
-        .applyInPandasWithState(old_fn, OUTPUT_SCHEMA, old_state, "append",
-                                GroupStateTimeout.EventTimeTimeout)
-        .writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch(
-            lambda df, bid: df.write.format("noop").mode("overwrite").save())
-        .trigger(availableNow=True)
-        .start()
-    )
-    old.awaitTermination(300)
-    assert old.exception() is None
+        old = (
+            read_transcript_stream(spark, inp, None, "10 minutes")
+            .select("conv_id", "ts",
+                    F.pmod(F.xxhash64("conv_id"), F.lit(8)).cast("int").alias("_bucket"))
+            .groupBy("_bucket")
+            .applyInPandasWithState(old_fn, OUTPUT_SCHEMA, old_state, "append",
+                                    GroupStateTimeout.EventTimeTimeout)
+            .writeStream.option("checkpointLocation", ckpt)
+            .foreachBatch(
+                lambda df, bid: df.write.format("noop").mode("overwrite").save())
+            .trigger(availableNow=True)
+            .start()
+        )
+        old.awaitTermination(300)
+        assert old.exception() is None
 
-    _cep_layout_input(spark, inp, seed=2)
-    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=8)
-    with pytest.raises(StreamingQueryException,
-                       match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
-        q.awaitTermination(300)
+        _cep_layout_input(spark, inp, seed=2)
+        q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=8)
+        with pytest.raises(StreamingQueryException,
+                           match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+            q.awaitTermination(300)
 
 
-def test_cep_bucketed_resume_with_other_buckets_raises(spark, tmp_path):
-    """Resuming a bucketed CEP checkpoint with a different ``buckets`` raises
-    CepStateLayoutError rather than restarting the re-bucketed FSMs."""
+def _neardup_pipeline(spark, inp, out, ckpt, buckets):
+    return jobs.neardup_pipeline(spark, inp, out, ckpt, state_buckets=buckets)
+
+
+def _cep_pipeline(spark, inp, out, ckpt, buckets):
+    return jobs.cep_pipeline(spark, inp, out, ckpt, buckets=buckets)
+
+
+@pytest.mark.parametrize("pipeline", [_cep_pipeline, _neardup_pipeline],
+                         ids=["cep", "neardup"])
+def test_keyed_state_resume_with_other_buckets_raises(spark, tmp_path, pipeline):
+    """Resuming a keyed-state checkpoint (CEP ``buckets``, neardup
+    ``state_buckets``) with another bucket count raises StateLayoutError
+    rather than restarting the re-bucketed keys."""
     from pyspark.sql.streaming import StreamingQueryException
 
     inp, out, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ck")
     _cep_layout_input(spark, inp, seed=1)
-    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=8)
+    q, _ = pipeline(spark, inp, out, ckpt, 8)
     q.awaitTermination(300)
     assert q.exception() is None
 
     _cep_layout_input(spark, inp, seed=2)
-    q, _ = jobs.cep_pipeline(spark, inp, out, ckpt, buckets=16)
-    with pytest.raises(StreamingQueryException, match="CepStateLayoutError"):
+    q, _ = pipeline(spark, inp, out, ckpt, 16)
+    with pytest.raises(StreamingQueryException, match="StateLayoutError"):
         q.awaitTermination(300)
