@@ -19,9 +19,11 @@ ingest enrichment: sniff/sha256/header dims + the reference's video_info
 dict from the real AVI/GIF/MP4 container walks, over a (doc_id, payload)
 binary stream).
 ``--continuous`` keeps the stream
-running with a processing-time trigger; default drains available input and
-exits (availableNow). Re-running with the same --checkpoint resumes from the
-recorded offsets with the exactly-once sink guaranteeing no duplicates.
+running with a processing-time trigger that starts a micro-batch every
+``--trigger-interval`` (default 10 seconds); without it the job drains the
+available input and exits (availableNow). Re-running with the same
+--checkpoint resumes from the recorded offsets with the exactly-once sink
+guaranteeing no duplicates.
 ``--est-state-keys`` (with --executors / --executor-heap-gb) selects the
 state-store provider from the measured HDFS/RocksDB crossover
 (session.state_store_conf; BENCH.md §5) instead of the default.
@@ -51,8 +53,10 @@ def main() -> None:
     p.add_argument("--gap", default="30 minutes")
     p.add_argument("--max-files-per-trigger", type=int, default=None)
     p.add_argument("--continuous", action="store_true",
-                   help="processing-time trigger instead of availableNow")
-    p.add_argument("--trigger-interval", default="10 seconds")
+                   help="keep running with a processing-time trigger every "
+                        "--trigger-interval instead of draining (availableNow)")
+    p.add_argument("--trigger-interval", default="10 seconds",
+                   help="micro-batch interval of --continuous")
     p.add_argument("--metrics", default=None, help="progress metrics jsonl path")
     p.add_argument("--no-dedup", action="store_true")
     p.add_argument("--target-partitions", type=int, default=None,
@@ -102,7 +106,7 @@ def main() -> None:
         out_dir=args.output,
         checkpoint=args.checkpoint,
         watermark=args.watermark,
-        available_now=not args.continuous,
+        trigger=args.trigger_interval if args.continuous else "availableNow",
     )
     if args.job == "turns":
         q, _ = jobs.turns_pipeline(
@@ -130,17 +134,10 @@ def main() -> None:
         # stateless multimodal ingest enrichment: real container walks
         # (AVI/GIF/MP4 + still decode) -> typed video_info columns
         q, _ = jobs.asset_info_pipeline(
-            spark=spark, input_path=args.input, out_dir=args.output,
-            checkpoint=args.checkpoint,
-            available_now=not args.continuous,
-            max_files_per_trigger=args.max_files_per_trigger,
+            max_files_per_trigger=args.max_files_per_trigger, **common
         )
     elif args.job == "context":
-        q, _ = jobs.context_pipeline(
-            spark=spark, input_path=args.input, out_dir=args.output,
-            checkpoint=args.checkpoint, watermark=args.watermark,
-            available_now=not args.continuous,
-        )
+        q, _ = jobs.context_pipeline(**common)
     else:
         q, _ = jobs.sessionized_pipeline(gap=args.gap, **common)
 

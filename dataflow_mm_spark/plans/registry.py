@@ -3255,71 +3255,96 @@ def _gate_files(spark: SparkSession) -> int:
     return max(4, spark.sparkContext.defaultParallelism // 2)
 
 
-def _gate_shuffle(spark: SparkSession, inp: str,
-                  rows_per_partition: int = 12_500):
-    """Scale-adaptive shuffle/state partitioning for a gate stream drain
-    (guide §2.4/§2.2): a streaming query instantiates ONE state store per
-    shuffle partition per stateful operator (a stream-stream join holds
-    four), and every micro-batch pays each store's commit bookkeeping
-    (~0.3-0.7 s summed per partition at sf0.1 — measured r6, independent of
-    data volume; fsync is NOT the cost, 0.3 ms on this box).  Partitions
-    are derived from the just-written fixture's actual row count
-    (rows // 12.5k clamped to [4, defaultParallelism]) so a 25k-row gate
-    drain stops paying 32 stores x batches of bookkeeping while larger
-    inputs still spread over the cluster (A/B at sf0.1:
-    transcripts_stream_join 7.9-10.8 s at 32 partitions vs 3.4-3.9 s at
-    4-8; every other gate drain improved too, incl. the Python-stateful
-    ones).  Results are partitioning-independent: aggregations are exact,
-    dedup/CEP/merge state is keyed, the join is an equi-join.  The prior
-    value is restored after the drain; a checkpoint resume re-pins its own
-    recorded value.  Returns a context manager."""
+def _stream_gate(spark: SparkSession, fixture, start, read,
+                 rows_per_partition: int = 12_500) -> DataFrame:
+    """The one scaffold of every stream gate: fill (or reuse) the input
+    fixture, drain ``start(gs, inp, out, ck)`` availableNow through
+    ``jobs.drain_resumable``, and pin ``read(out, sink)`` — built on the
+    caller's session — with ``localCheckpoint`` before the temp dirs go
+    (the caller collects AFTER the gate returns).  ``fixture`` is an
+    existing parquet dir or a writer that fills the path it is given.
+
+    Scale-adaptive shuffle/state partitioning (guide §2.4/§2.2): a streaming
+    query instantiates ONE state store per shuffle partition per stateful
+    operator (a stream-stream join holds four), and every micro-batch pays
+    each store's commit bookkeeping (~0.3-0.7 s summed per partition at
+    sf0.1 — measured r6, independent of data volume; fsync is NOT the cost,
+    0.3 ms on this box).  Partitions are derived from the fixture's actual
+    row count (rows // ``rows_per_partition`` clamped to [4,
+    defaultParallelism]) so a 25k-row gate drain stops paying 32 stores x
+    batches of bookkeeping while larger inputs still spread over the
+    cluster (A/B at sf0.1: transcripts_stream_join 7.9-10.8 s at 32
+    partitions vs 3.4-3.9 s at 4-8; every other gate drain improved too,
+    incl. the Python-stateful ones).  Results are partitioning-independent:
+    aggregations are exact, dedup/CEP/merge state is keyed, the join is an
+    equi-join.  The count is set on ``gs = spark.newSession()``, never on
+    the caller's session: ``newSession`` inherits the factory conf
+    (timezone, checkpoint checksum, state-store provider, worker daemon,
+    Arrow batch size), the query clones ``gs`` at start, and a checkpoint
+    resume re-pins its own recorded value.  Query listeners are per
+    session: one on the caller's ``spark.streams`` does not see the drain."""
     import glob
     import os
-    from contextlib import contextmanager
+    import shutil
+    import tempfile
 
-    import pyarrow.parquet as _pq
+    import pyarrow.parquet as pq
 
-    rows = 0
-    for f in glob.glob(os.path.join(inp, "*.parquet")):
-        try:
-            rows += _pq.ParquetFile(f).metadata.num_rows
-        except Exception:  # noqa: BLE001 — sizing heuristic only
-            pass
-    n = max(4, min(spark.sparkContext.defaultParallelism,
-                   rows // rows_per_partition))
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
+    from dataflow_mm_spark.streaming.jobs import drain_resumable
 
-    @contextmanager
-    def scope():
-        spark.conf.set(key, str(n))
-        try:
-            yield
-        finally:
-            spark.conf.set(key, prev)
+    work = tempfile.mkdtemp(prefix="dfmm_gate_")
+    try:
+        if isinstance(fixture, str):
+            inp = fixture
+        else:
+            inp = os.path.join(work, "in")
+            fixture(inp)
+        out, ck = os.path.join(work, "out"), os.path.join(work, "ck")
+        rows = sum(pq.read_metadata(f).num_rows
+                   for f in glob.glob(os.path.join(inp, "*.parquet")))
+        gs = spark.newSession()
+        gs.conf.set("spark.sql.shuffle.partitions", str(max(
+            4, min(spark.sparkContext.defaultParallelism,
+                   rows // rows_per_partition))))
+        sink = drain_resumable(lambda: start(gs, inp, out, ck))
+        return read(out, sink).localCheckpoint()
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
-    return scope()
 
+def _gate_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The portable synthetic turns in the stream source's column types."""
+    from dataflow_mm_spark.plans.portable import synthetic_turns_cached
 
-def _with_sentinel(t: DataFrame, text: str = "sentinel push watermark") -> DataFrame:
-    """Append the far-future watermark-advance sentinel row to a transcript
-    fixture, built ENTIRELY JVM-side from a one-row aggregate of the fixture
-    itself.  The previous local-list ``createDataFrame`` sentinel
-    parallelizes into defaultParallelism Python-backed partitions, and every
-    job over it spawns one Python worker per (empty) partition — measured
-    4-6 s of pure worker-spawn tax per 1-row sentinel write at local[32]
-    (guide §4: eliminate the Python boundary).  The agg form also removes
-    the separate ``max_ts`` collect job: one fixture-write job does scan +
-    max + union + shuffle.  Row values are identical (max(ts) + 2 h)."""
-    sent = t.agg(F.max("ts").alias("_mx")).select(
-        F.lit("conv-sentinel").alias("conv_id"),
-        F.lit(0).cast("int").alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.lit(text).alias("text"),
-        F.lit(None).cast("string").alias("tool"),
-        (F.col("_mx") + F.expr("INTERVAL 2 HOURS")).alias("ts"),
+    return synthetic_turns_cached(spark, sf_dir).select(
+        "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
+        "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
     )
-    return t.unionAll(sent)
+
+
+def _with_sentinel(df: DataFrame, **literals) -> DataFrame:
+    """Append the far-future watermark-advance sentinel row to a gate
+    fixture: ``conv_id='conv-sentinel'``, ``ts = max(ts) + 2 h``, each
+    column named in ``literals`` set to that literal cast to the column's
+    type, every other column NULL.  Built ENTIRELY JVM-side from a one-row
+    aggregate of the fixture itself.  A local-list ``createDataFrame``
+    sentinel parallelizes into defaultParallelism Python-backed partitions,
+    and every job over it spawns one Python worker per (empty) partition —
+    measured 4-6 s of pure worker-spawn tax per 1-row sentinel write at
+    local[32] (guide §4: eliminate the Python boundary).  The agg form also
+    removes the separate ``max_ts`` collect job: one fixture-write job does
+    scan + max + union + shuffle."""
+    def value(f):
+        if f.name == "conv_id":
+            return F.lit("conv-sentinel")
+        if f.name == "ts":
+            return F.col("_mx") + F.expr("INTERVAL 2 HOURS")
+        return F.lit(literals.get(f.name)).cast(f.dataType)
+
+    sent = df.agg(F.max("ts").alias("_mx")).select(
+        *[value(f).alias(f.name) for f in df.schema.fields]
+    )
+    return df.unionAll(sent)
 
 
 def transcripts_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3337,58 +3362,36 @@ def transcripts_stream_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     to closed-form batch SQL. Duplicates being byte-identical means
     keep-first arrival ambiguity cannot leak into the hash, while a dedup
     failure (extra rows) or quality/extraction drift still does."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.plans.portable import phash
+    from dataflow_mm_spark.streaming.jobs import turns_pipeline
 
-    from dataflow_mm_spark.plans.portable import (
-        phash,
-        synthetic_turns_cached as synthetic_turns,
-    )
-    from dataflow_mm_spark.streaming.jobs import drain_resumable, turns_pipeline
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_stream_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        t = synthetic_turns(spark, sf_dir).select(
-            "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-            "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
-        )
+    def fixture(inp):
+        t = _gate_turns(spark, sf_dir)
         t.repartition(4).write.parquet(inp)
-        dup_arrivals = t.filter(
+        t.filter(
             phash("dupkey", F.col("conv_id"), F.col("turn_idx")) % 17 == 0
-        )
-        dup_arrivals.coalesce(1).write.mode("append").parquet(inp)
-        with _gate_shuffle(spark, inp):
-            sink = drain_resumable(lambda: turns_pipeline(
-                spark, inp, out, ck, max_files_per_trigger=3
-            ))
+        ).coalesce(1).write.mode("append").parquet(inp)
+
+    def read(out, sink):
         # r4: COMPACT the first half of the committed micro-batches into one
         # generation (Iceberg rewrite_data_files analogue) before reading —
-        # the unchanged value hash below proves compaction preserves rows
+        # the unchanged value hash proves compaction preserves rows
         # exactly AND that the mixed read path (one generation manifest +
         # live batch directories) is exact, under the multi-batch duplicate
         # arrivals above
         committed = sink.committed_batches(spark)
         sink.compact(spark, upto_batch=committed[len(committed) // 2])
-        res = (
-            sink.read_committed(spark)
-            .select(
-                "conv_id",
-                "turn_idx",
-                "role",
-                F.col("answer").alias("answer"),
-                F.size("tool_calls").alias("n_tools"),
-            )
-            # pin rows before the temp sink dir is removed (the driver
-            # collects AFTER this function returns)
-            .localCheckpoint()
+        return sink.read_committed(spark).select(
+            "conv_id", "turn_idx", "role", "answer",
+            F.size("tool_calls").alias("n_tools"),
         )
-        return res
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _stream_gate(
+        spark, fixture,
+        lambda gs, inp, out, ck: turns_pipeline(
+            gs, inp, out, ck, max_files_per_trigger=3),
+        read,
+    )
 
 
 TRANSCRIPTS_STREAM_SQL = f"""
@@ -3411,44 +3414,16 @@ def transcripts_stream_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     append mode finalizes them all — same device as
     test_windowed_stream_matches_batch); committed output hash-compares to
     the closed-form batch SQL."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.streaming.jobs import windowed_pipeline
 
-    from dataflow_mm_spark.plans.portable import (
-        synthetic_turns_cached as synthetic_turns,
+    return _stream_gate(
+        spark, _sentineled_turns_fixture(spark, sf_dir),
+        lambda gs, inp, out, ck: windowed_pipeline(
+            gs, inp, out, ck, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out)
+        .filter(F.col("conv_id") != "conv-sentinel")
+        .select("conv_id", "win_start", "win_end", "n_turns", "n_assistant"),
     )
-    from dataflow_mm_spark.streaming.jobs import drain_resumable, windowed_pipeline
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_swin_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        t = synthetic_turns(spark, sf_dir).select(
-            "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-            "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
-        )
-        # the sentinel text must PASS the quality rules: Catalyst pushes the
-        # ts-free quality predicate BELOW the EventTimeWatermark node, so
-        # only passing rows drive the watermark (verified: an 'x' sentinel
-        # left the final window unfinalized)
-        from dataflow_mm_spark.datagen import TEMPLATES
-
-        _with_sentinel(t, TEMPLATES[0]).repartition(_gate_files(spark)).write.parquet(inp)
-        with _gate_shuffle(spark, inp):
-            drain_resumable(
-                lambda: windowed_pipeline(spark, inp, out, ck,
-                                          sink_mode="native")
-            )
-        return (
-            spark.read.parquet(out)
-            .filter(F.col("conv_id") != "conv-sentinel")
-            .select("conv_id", "win_start", "win_end", "n_turns", "n_assistant")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 TRANSCRIPTS_STREAM_WIN_SQL = f"""
@@ -3468,13 +3443,17 @@ _SENT_FIXTURE_CACHE: dict[tuple[str, str], str] = {}
 
 def _sentineled_turns_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Session-memoized parquet dir holding the portable synthetic turns +
-    far-future sentinel — the byte-identical availableNow INPUT that the
-    cep / sessions / cep_summary gate drains each re-derived and re-wrote
-    per query (~0.7 s each at sf0.1).  Same device and justification as
-    ``portable.synthetic_turns_cached``: a deterministic input fixture
-    materialized once per (application, sf_dir) — never query results.
-    Every consumer still runs its complete streaming drain from scratch
-    against its own checkpoint/output dirs."""
+    far-future sentinel — the byte-identical availableNow INPUT of the
+    windows / cep / sessions / cep_summary gate drains, which each re-derived
+    and re-wrote it per query (~0.7 s each at sf0.1).  Same device and
+    justification as ``portable.synthetic_turns_cached``: a deterministic
+    input fixture materialized once per (application, sf_dir) — never query
+    results.  Every consumer still runs its complete streaming drain from
+    scratch against its own checkpoint/output dirs.  The sentinel text must
+    PASS the quality rules: Catalyst pushes the windows job's ts-free
+    quality predicate BELOW the EventTimeWatermark node, so only passing
+    rows drive the watermark (verified: an 'x' sentinel left the final
+    window unfinalized)."""
     import atexit
     import os
     import shutil
@@ -3483,14 +3462,12 @@ def _sentineled_turns_fixture(spark: SparkSession, sf_dir: str) -> str:
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
     path = _SENT_FIXTURE_CACHE.get(key)
     if path is None or not os.path.isdir(path):
-        from dataflow_mm_spark.plans.portable import synthetic_turns_cached
+        from dataflow_mm_spark.datagen import TEMPLATES
 
         path = tempfile.mkdtemp(prefix="dfmm_gate_turns_")
-        t = synthetic_turns_cached(spark, sf_dir).select(
-            "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-            "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
-        )
-        _with_sentinel(t).repartition(4).write.mode("overwrite").parquet(path)
+        _with_sentinel(
+            _gate_turns(spark, sf_dir), turn_idx=0, role="user", text=TEMPLATES[0]
+        ).repartition(_gate_files(spark)).write.mode("overwrite").parquet(path)
         _SENT_FIXTURE_CACHE[key] = path
         atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
@@ -3498,7 +3475,7 @@ def _sentineled_turns_fixture(spark: SparkSession, sf_dir: str) -> str:
 
 def transcripts_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.12 stateful CEP under the value-hash gate: the REAL bucketed CEP
-    FSM (`cep_stream_bucketed` — per-conversation FSMs in
+    FSM (`cep_stream` — per-conversation FSMs in
     streaming/keyed_state.py, event-time close) drains availableNow over the
     portable synthetic turns; a far-future sentinel closes every
     conversation so trailing unpaired tool calls emit. The committed
@@ -3507,37 +3484,19 @@ def transcripts_stream_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity suite links the two FSM forms); conv_summary rows are excluded —
     their per-epoch grouping is a streaming-only notion with no closed
     form."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.streaming.jobs import cep_pipeline
 
-    from dataflow_mm_spark.streaming.jobs import cep_pipeline, drain_resumable
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_scep_")
-    try:
-        inp = _sentineled_turns_fixture(spark, sf_dir)
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        with _gate_shuffle(spark, inp):
-            drain_resumable(lambda: cep_pipeline(
-                spark, inp, out, ck, buckets=32, sink_mode="native"
-            ))
-        return (
-            spark.read.parquet(out)
-            .filter(
-                (F.col("conv_id") != "conv-sentinel")
-                & F.col("kind").isin(
-                    "role_violation", "tool_paired", "tool_unpaired"
-                )
-            )
-            .select(
-                "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
-                "kind",
-            )
-            .localCheckpoint()
+    return _stream_gate(
+        spark, _sentineled_turns_fixture(spark, sf_dir),
+        lambda gs, inp, out, ck: cep_pipeline(
+            gs, inp, out, ck, buckets=32, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out)
+        .filter(
+            (F.col("conv_id") != "conv-sentinel")
+            & F.col("kind").isin("role_violation", "tool_paired", "tool_unpaired")
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        .select("conv_id", F.col("turn_idx").cast("long").alias("turn_idx"), "kind"),
+    )
 
 
 TRANSCRIPTS_STREAM_CEP_SQL = f"""
@@ -3577,30 +3536,16 @@ def transcripts_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed output hash-compares to the batch sessionization SQL already
     oracling `session_agg_batch` (gap-walk replay, fractional-epoch
     gaps)."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.streaming.jobs import sessionized_pipeline
 
-    from dataflow_mm_spark.streaming.jobs import drain_resumable, sessionized_pipeline
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_ssess_")
-    try:
-        inp = _sentineled_turns_fixture(spark, sf_dir)
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        with _gate_shuffle(spark, inp):
-            drain_resumable(
-                lambda: sessionized_pipeline(spark, inp, out, ck,
-                                             sink_mode="native")
-            )
-        return (
-            spark.read.parquet(out)
-            .filter(F.col("conv_id") != "conv-sentinel")
-            .select("conv_id", "sess_start", "sess_end", "n_turns")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _stream_gate(
+        spark, _sentineled_turns_fixture(spark, sf_dir),
+        lambda gs, inp, out, ck: sessionized_pipeline(
+            gs, inp, out, ck, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out)
+        .filter(F.col("conv_id") != "conv-sentinel")
+        .select("conv_id", "sess_start", "sess_end", "n_turns"),
+    )
 
 
 TRANSCRIPTS_STREAM_SESS_SQL = f"""
@@ -3618,39 +3563,20 @@ def transcripts_stream_cep_summary(spark: SparkSession, sf_dir: str) -> DataFram
     open call, matching batch lead()-NULL semantics). Each counter is
     closed-form per conv_id, so the last streaming-only output kind is now
     value-hash-checked too."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.streaming.jobs import cep_pipeline
 
-    from dataflow_mm_spark.streaming.jobs import cep_pipeline, drain_resumable
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_scepsum_")
-    try:
-        inp = _sentineled_turns_fixture(spark, sf_dir)
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        with _gate_shuffle(spark, inp):
-            drain_resumable(lambda: cep_pipeline(
-                spark, inp, out, ck, buckets=32, sink_mode="native"
-            ))
-        d = F.col("detail")
-        return (
-            spark.read.parquet(out)
-            .filter(
-                (F.col("kind") == "conv_summary")
-                & (F.col("conv_id") != "conv-sentinel")
-            )
-            .select(
-                "conv_id",
-                F.get_json_object(d, "$.n_turns").cast("int").alias("n_turns"),
-                F.get_json_object(d, "$.n_violations").cast("int").alias("n_violations"),
-                F.get_json_object(d, "$.n_paired").cast("int").alias("n_paired"),
-                F.get_json_object(d, "$.n_unpaired").cast("int").alias("n_unpaired"),
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    d = F.col("detail")
+    counters = ("n_turns", "n_violations", "n_paired", "n_unpaired")
+    return _stream_gate(
+        spark, _sentineled_turns_fixture(spark, sf_dir),
+        lambda gs, inp, out, ck: cep_pipeline(
+            gs, inp, out, ck, buckets=32, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out)
+        .filter((F.col("kind") == "conv_summary") & (F.col("conv_id") != "conv-sentinel"))
+        .select("conv_id", *[
+            F.get_json_object(d, f"$.{c}").cast("int").alias(c) for c in counters
+        ]),
+    )
 
 
 TRANSCRIPTS_STREAM_CEP_SUM_SQL = f"""
@@ -3711,43 +3637,21 @@ def transcripts_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (text included — the context payload), so the unsampled gate costs
     ~215s at sf0.1 in bench.py for no extra semantic coverage; streaming
     THROUGHPUT is measured by run_streaming_bench, not the gate."""
-    import os
-    import shutil
-    import tempfile
+    from dataflow_mm_spark.plans.portable import phash
+    from dataflow_mm_spark.streaming.jobs import context_pipeline
 
-    from dataflow_mm_spark.plans.portable import (
-        phash,
-        synthetic_turns_cached as synthetic_turns,
+    return _stream_gate(
+        spark,
+        lambda inp: _gate_turns(spark, sf_dir)
+        .filter(phash("sjoin", F.col("conv_id")) % 8 == 0)
+        .repartition(4).write.parquet(inp),
+        lambda gs, inp, out, ck: context_pipeline(
+            gs, inp, out, ck, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out).select(
+            "conv_id", "turn_idx", "role", "ts",
+            "prev_role", "prev_ts", "role_repeat", "quality_pass",
+        ),
     )
-    from dataflow_mm_spark.streaming.jobs import drain_resumable, context_pipeline
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_sjoin_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        t = synthetic_turns(spark, sf_dir).filter(
-            phash("sjoin", F.col("conv_id")) % 8 == 0
-        ).select(
-            "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-            "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
-        )
-        t.repartition(4).write.parquet(inp)
-        with _gate_shuffle(spark, inp):
-            drain_resumable(
-                lambda: context_pipeline(spark, inp, out, ck,
-                                         sink_mode="native")
-            )
-        return (
-            spark.read.parquet(out)
-            .select(
-                "conv_id", "turn_idx", "role", "ts",
-                "prev_role", "prev_ts", "role_repeat", "quality_pass",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
 
 
 TRANSCRIPTS_STREAM_JOIN_SQL = f"""
@@ -3778,7 +3682,7 @@ def events_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversation closes and emits. The committed merged sequences
     hash-compare to the same DuckDB recursive-CTE greedy walk, keyed on the
     string conv_id the streaming job shuffles on. Gate sink_mode="native"
-    (JVM-only parquet sink — see streaming/jobs._start_native for the py4j
+    (JVM-only parquet sink — see streaming/jobs._start for the py4j
     callback-channel session cap; the foreachBatch exactly-once sink is
     gated by transcripts_stream_pipeline/_neardup). Input is a portable
     1-in-4 conversation sample (mirrored in the SQL): the per-key ordered
@@ -3787,19 +3691,11 @@ def events_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage — the batch `events_merge_spans` oracle stays unsampled, and
     streaming THROUGHPUT is measured by run_streaming_bench, not the
     gate."""
-    import os
-    import shutil
-    import tempfile
-
     from dataflow_mm_spark.functions.timeutil import epoch_seconds
     from dataflow_mm_spark.plans.portable import phash
-    from dataflow_mm_spark.streaming.jobs import drain_resumable, merge_spans_pipeline
+    from dataflow_mm_spark.streaming.jobs import merge_spans_pipeline
 
-    work = tempfile.mkdtemp(prefix="dfmm_gate_smerge_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
+    def fixture(inp):
         ev = _t(spark, sf_dir, "events").filter(
             phash("smerge", F.col("user_id").cast("string")) % 4 == 0
         )
@@ -3810,34 +3706,16 @@ def events_stream_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             (sec + (F.col("event_id") % 7 + 1)).cast("double").alias("span_end"),
             F.col("ts").cast("timestamp").alias("ts"),
         )
-        # JVM-literal sentinel (see _with_sentinel: a local-list
-        # createDataFrame costs ~4-6 s of empty-Python-worker spawns per
-        # write at local[32]); the one-row agg fuses max(ts) into the
-        # fixture-write job, removing the separate collect too.
-        sent = spans.agg(F.max("ts").alias("_mx")).select(
-            F.lit("conv-sentinel").alias("conv_id"),
-            F.lit(0.0).alias("span_start"),
-            F.lit(1.0).alias("span_end"),
-            (F.col("_mx") + F.expr("INTERVAL 2 HOURS")).alias("ts"),
-        )
-        spans.unionAll(sent).repartition(4).write.parquet(inp)
-        with _gate_shuffle(spark, inp):
-            drain_resumable(
-                lambda: merge_spans_pipeline(
-                    spark, inp, out, ck, max_duration=30.0, sink_mode="native"
-                )
-            )
-        return (
-            spark.read.parquet(out)
-            .filter(F.col("conv_id") != "conv-sentinel")
-            .select(
-                "conv_id", "sequence_num", "merged_start", "merged_end",
-                "n_spans",
-            )
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        _with_sentinel(spans, span_start=0.0, span_end=1.0).repartition(4).write.parquet(inp)
+
+    return _stream_gate(
+        spark, fixture,
+        lambda gs, inp, out, ck: merge_spans_pipeline(
+            gs, inp, out, ck, max_duration=30.0, sink_mode="native"),
+        lambda out, sink: spark.read.parquet(out)
+        .filter(F.col("conv_id") != "conv-sentinel")
+        .select("conv_id", "sequence_num", "merged_start", "merged_end", "n_spans"),
+    )
 
 
 EVENTS_STREAM_MERGE_SQL = f"""
@@ -3889,59 +3767,43 @@ def transcripts_stream_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a portable 1-in-4 conversation sample (mirrored in SQL) to bound the
     oracle's 16×n_shingles md5 work; ``max_entries`` is raised so the
     bounded production kept-window ring cannot evict within the gate's
-    single batch at any sf."""
-    import os
-    import shutil
-    import tempfile
+    single batch at any sf.
 
-    from dataflow_mm_spark.plans.portable import (
-        phash,
-        synthetic_turns_cached as synthetic_turns,
-    )
-    from dataflow_mm_spark.streaming.jobs import (
-        drain_resumable,
-        neardup_pipeline,
+    TTL far past the data horizon: dedup-state timeouts are pure memory
+    eviction (no semantic close event, unlike CEP/merge), and the
+    closed-form oracle assumes no eviction.  Letting the watermark-advance
+    batch time out the state groups costs a GroupState round-trip each
+    (measured r5: the empty batch drops 6.8 s -> 2.7 s at sf0.1) for
+    decisions that cannot change in a bounded availableNow drain."""
+    from dataflow_mm_spark.plans.portable import phash
+
+    return _neardup_gate(
+        spark,
+        lambda inp: _gate_turns(spark, sf_dir)
+        .filter(phash("snear", F.col("conv_id")) % 4 == 0)
+        .repartition(_gate_files(spark)).write.parquet(inp),
+        min_frac=1.0,
     )
 
-    work = tempfile.mkdtemp(prefix="dfmm_gate_snear_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        t = synthetic_turns(spark, sf_dir).filter(
-            phash("snear", F.col("conv_id")) % 4 == 0
-        ).select(
-            "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"),
-            "role", "text", "tool", F.col("ts").cast("timestamp").alias("ts"),
-        )
-        t.repartition(_gate_files(spark)).write.parquet(inp)
-        # rows_per_partition=1500: the per-arrival Python stage needs
-        # worker parallelism more than the state commits need fewer stores
-        # (A/B r6: shuffle=4 13.6s vs 8 7.8s; re-tuned after the checksum
-        # fix made commits cheap — 1500 edges out 3000 by ~0.3-0.5s)
-        with _gate_shuffle(spark, inp, rows_per_partition=1_500):
-            sink = drain_resumable(
-                lambda: neardup_pipeline(
-                    spark, inp, out, ck,
-                    min_frac=1.0, max_entries=1_000_000,
-                    # TTL far past the data horizon: dedup-state timeouts
-                    # are pure memory eviction (no semantic close event,
-                    # unlike CEP/merge), and the closed-form oracle assumes
-                    # no eviction.  Letting the watermark-advance batch
-                    # time out the state groups costs a GroupState
-                    # round-trip each (measured r5: the empty batch drops
-                    # 6.8 s -> 2.7 s at sf0.1) for decisions that cannot
-                    # change in a bounded availableNow drain.
-                    ttl_minutes=10_000_000,
-                )
-            )
-        return (
-            sink.read_committed(spark)
-            .select("row_key", "dup")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+def _neardup_gate(spark: SparkSession, fixture, min_frac: float) -> DataFrame:
+    """Drain ``neardup_pipeline`` at ``min_frac`` with an eviction-only TTL
+    past the data horizon and a kept-window ring that cannot evict, and
+    read back the ``(row_key, dup)`` decisions.  rows_per_partition=1500:
+    the per-arrival Python stage needs worker parallelism more than the
+    state commits need fewer stores (A/B r6: shuffle=4 13.6s vs 8 7.8s;
+    re-tuned after the checksum fix made commits cheap — 1500 edges out
+    3000 by ~0.3-0.5s)."""
+    from dataflow_mm_spark.streaming.jobs import neardup_pipeline
+
+    return _stream_gate(
+        spark, fixture,
+        lambda gs, inp, out, ck: neardup_pipeline(
+            gs, inp, out, ck, min_frac=min_frac, max_entries=1_000_000,
+            ttl_minutes=10_000_000),
+        lambda out, sink: sink.read_committed(spark).select("row_key", "dup"),
+        rows_per_partition=1_500,
+    )
 
 
 TRANSCRIPTS_STREAM_NEARDUP_SQL = f"""
@@ -3997,22 +3859,8 @@ def transcripts_stream_neardup_chain(spark: SparkSession, sf_dir: str) -> DataFr
     (streaming/dedup.py). Threshold is integer-exact: agree ≥ 0.75 ⟺
     ≥ 12 of 16 sixty-bit signature positions equal (reference semantics:
     image_diversity_filter.py:14-34)."""
-    import os
-    import shutil
-    import tempfile
-
-    from dataflow_mm_spark.streaming.jobs import (
-        drain_resumable,
-        neardup_pipeline,
-    )
-
-    work = tempfile.mkdtemp(prefix="dfmm_gate_chain_")
-    try:
-        inp = os.path.join(work, "in")
-        out = os.path.join(work, "out")
-        ck = os.path.join(work, "ck")
-        docs = _t(spark, sf_dir, "documents").select("doc_id")
-        v = docs.select(
+    def fixture(inp):
+        v = _t(spark, sf_dir, "documents").select(
             "doc_id",
             F.explode(F.sequence(F.lit(0), F.lit(2))).alias("variant"),
         )
@@ -4024,7 +3872,7 @@ def transcripts_stream_neardup_chain(spark: SparkSession, sf_dir: str) -> DataFr
                 (j + F.col("variant")).cast("string"),
             ),
         )
-        t = v.select(
+        v.select(
             F.concat(F.lit("g"), gid).alias("conv_id"),
             F.col("variant").cast("int").alias("turn_idx"),
             F.lit("user").alias("role"),
@@ -4033,27 +3881,9 @@ def transcripts_stream_neardup_chain(spark: SparkSession, sf_dir: str) -> DataFr
             F.timestamp_seconds(
                 F.lit(1700000000) + F.col("doc_id") * 100 + F.col("variant")
             ).alias("ts"),
-        )
-        t.repartition(_gate_files(spark)).write.parquet(inp)
-        # rows_per_partition=1500: the per-arrival Python stage needs
-        # worker parallelism more than the state commits need fewer stores
-        # (A/B r6: shuffle=4 13.6s vs 8 7.8s; re-tuned after the checksum
-        # fix made commits cheap — 1500 edges out 3000 by ~0.3-0.5s)
-        with _gate_shuffle(spark, inp, rows_per_partition=1_500):
-            sink = drain_resumable(
-                lambda: neardup_pipeline(
-                    spark, inp, out, ck,
-                    min_frac=0.75, max_entries=1_000_000,
-                    ttl_minutes=10_000_000,  # eviction-only TTL past horizon
-                )
-            )
-        return (
-            sink.read_committed(spark)
-            .select("row_key", "dup")
-            .localCheckpoint()
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ).repartition(_gate_files(spark)).write.parquet(inp)
+
+    return _neardup_gate(spark, fixture, min_frac=0.75)
 
 
 TRANSCRIPTS_STREAM_NEARDUP_CHAIN_SQL = """
@@ -4544,9 +4374,9 @@ FROM ({DOCS_AESTHETIC_MLP_SQL})
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+_GATED: list[tuple[Callable[[SparkSession, str], DataFrame], str]] = [
     # Order is load-bearing twice over: the gate (driver + tools/
-    # check_correctness.py) walks this dict front to back with ONE DuckDB
+    # check_correctness.py) walks this list front to back with ONE DuckDB
     # connection for every oracle, and DuckDB buffer reservations can
     # accumulate across a long-connection session under co-tenant memory
     # pressure (observed: a 16KB allocation refused at <3GB RSS late in the
@@ -4555,186 +4385,111 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # the connection is young; the cheap oracles absorb the tail.  The
     # streaming gate queries stay LAST (a wedged stream query must not
     # shadow the batch rows), with the two foreachBatch ones leading that
-    # tail — see streaming/jobs._start_native for the py4j session cap.
+    # tail — see streaming/jobs._start for the py4j session cap.
     # r5: consolidated via family suites, then grown back to EXACTLY 50
     # with the real-kernel rows (audio suite, bmp pixels) — the driver's
     # 50-entry CORRECTNESS record witnesses EVERY row, streaming included.
     # The registry is FULL: a new query must join an existing suite or
     # consolidate one first (CLAUDE.md).
-    "q1_pricing_summary": q1_pricing_summary,
-    "transcripts_quality_windows": transcripts_quality_windows,
-    "emb_ann_lsh_topk": emb_ann_lsh_topk,
-    "docs_ngram_neardup": docs_ngram_neardup,
-    "docs_joint_neardup": docs_joint_neardup,
-    "events_merge_spans": events_merge_spans,
-    "transcripts_contract_suite": transcripts_contract_suite,
-    "transcripts_sessionization": transcripts_sessionization,
-    "top_customers_by_revenue": top_customers_by_revenue,
-    "events_windows_suite": events_windows_suite,
-    "events_dedup_first": events_dedup_first,
-    "events_cep_error_purchase": events_cep_error_purchase,
-    "transcript_prevturn_join": transcript_prevturn_join,
-    "transcript_messages_flat": transcript_messages_flat,
-    "docs_quality_filter": docs_quality_filter,
-    "docs_quality_filter_mutated": docs_quality_filter_mutated,
-    "docs_eval_suite": docs_eval_suite,
-    "docs_exact_dedup": docs_exact_dedup,
-    "docs_minhash_signatures": docs_minhash_signatures,
-    "docs_minhash_lsh_pairs": docs_minhash_lsh_pairs,
-    "docs_text_analysis": docs_text_analysis,
-    "docs_normalize_suite": docs_normalize_suite,
-    "events_expansion_suite": events_expansion_suite,
-    "events_clip_suite": events_clip_suite,
-    "docs_parse_suite": docs_parse_suite,
-    "emb_cosine_topk": emb_cosine_topk,
-    "emb_cosine_neardup": emb_cosine_neardup,
-    "emb_knn_avg_sim": emb_knn_avg_sim,
-    "emb_datatailor_select": emb_datatailor_select,
-    "docs_simhash_neardup": docs_simhash_neardup,
-    "docs_winnow_fingerprints": docs_winnow_fingerprints,
-    "docs_prompted_qa": docs_prompted_qa,
-    "docs_batch_generate": docs_batch_generate,
-    "docs_rollout_judge": docs_rollout_judge,
-    "docs_mcts_chains": docs_mcts_chains,
-    "docs_filter_suite": docs_filter_suite,
-    "docs_visual_dependency": docs_visual_dependency,
-    "docs_image_dims": docs_image_dims,
-    "events_heavy_hitters": events_heavy_hitters,
-    "events_audio_suite": events_audio_suite,
-    "docs_bmp_pixels": docs_bmp_pixels,
-    "transcripts_stream_pipeline": transcripts_stream_pipeline,
-    "transcripts_stream_neardup": transcripts_stream_neardup,
-    "events_stream_merge": events_stream_merge,
-    "transcripts_stream_windows": transcripts_stream_windows,
-    "transcripts_stream_cep": transcripts_stream_cep,
-    "transcripts_stream_sessions": transcripts_stream_sessions,
-    "transcripts_stream_cep_summary": transcripts_stream_cep_summary,
-    "transcripts_stream_join": transcripts_stream_join,
-    "transcripts_stream_neardup_chain": transcripts_stream_neardup_chain,
+    (q1_pricing_summary, Q1_SQL),
+    (transcripts_quality_windows, TRANSCRIPTS_QUALITY_WIN_SQL),
+    (emb_ann_lsh_topk, EMB_ANN_SQL),
+    (docs_ngram_neardup, DOCS_NGRAM_NEARDUP_SQL),
+    (docs_joint_neardup, DOCS_JOINT_NEARDUP_SQL),
+    (events_merge_spans, EVENTS_MERGE_SPANS_SQL),
+    (transcripts_contract_suite, TRANSCRIPTS_CONTRACT_SUITE_SQL),
+    (transcripts_sessionization, TRANSCRIPTS_SESSION_SQL),
+    (top_customers_by_revenue, TOP_CUSTOMERS_SQL),
+    (events_windows_suite, EVENTS_WINDOWS_SUITE_SQL),
+    (events_dedup_first, EVENTS_DEDUP_SQL),
+    (events_cep_error_purchase, EVENTS_CEP_SQL),
+    (transcript_prevturn_join, TRANSCRIPT_PREVTURN_SQL),
+    (transcript_messages_flat, TRANSCRIPT_MESSAGES_SQL),
+    (docs_quality_filter, DOCS_QUALITY_SQL),
+    (docs_quality_filter_mutated, DOCS_QUALITY_MUT_SQL),
+    (docs_eval_suite, DOCS_EVAL_SUITE_SQL),
+    (docs_exact_dedup, DOCS_EXACT_DEDUP_SQL),
+    (docs_minhash_signatures, DOCS_MINHASH_SQL),
+    (docs_minhash_lsh_pairs, DOCS_MINHASH_LSH_SQL),
+    (docs_text_analysis, DOCS_TEXT_ANALYSIS_SQL),
+    (docs_normalize_suite, DOCS_NORMALIZE_SUITE_SQL),
+    (events_expansion_suite, EVENTS_EXPANSION_SUITE_SQL),
+    (events_clip_suite, EVENTS_CLIP_SUITE_SQL),
+    (docs_parse_suite, DOCS_PARSE_SUITE_SQL),
+    (emb_cosine_topk, EMB_TOPK_SQL),
+    (emb_cosine_neardup, EMB_NEARDUP_SQL),
+    (emb_knn_avg_sim, EMB_KNN_SQL),
+    (emb_datatailor_select, EMB_DATATAILOR_SQL),
+    (docs_simhash_neardup, DOCS_SIMHASH_SQL),
+    (docs_winnow_fingerprints, DOCS_WINNOW_SQL),
+    (docs_prompted_qa, DOCS_PROMPTED_QA_SQL),
+    (docs_batch_generate, DOCS_BATCH_GEN_SQL),
+    (docs_rollout_judge, DOCS_ROLLOUT_JUDGE_SQL),
+    (docs_mcts_chains, DOCS_MCTS_SQL),
+    (docs_filter_suite, DOCS_FILTER_SUITE_SQL),
+    (docs_visual_dependency, DOCS_VISUAL_DEP_SQL),
+    (docs_image_dims, DOCS_IMAGE_DIMS_SQL),
+    (events_heavy_hitters, EVENTS_HEAVY_HITTERS_SQL),
+    (events_audio_suite, EVENTS_AUDIO_SUITE_SQL),
+    (docs_bmp_pixels, DOCS_BMP_PIXELS_SQL),
+    (transcripts_stream_pipeline, TRANSCRIPTS_STREAM_SQL),
+    (transcripts_stream_neardup, TRANSCRIPTS_STREAM_NEARDUP_SQL),
+    (events_stream_merge, EVENTS_STREAM_MERGE_SQL),
+    (transcripts_stream_windows, TRANSCRIPTS_STREAM_WIN_SQL),
+    (transcripts_stream_cep, TRANSCRIPTS_STREAM_CEP_SQL),
+    (transcripts_stream_sessions, TRANSCRIPTS_STREAM_SESS_SQL),
+    (transcripts_stream_cep_summary, TRANSCRIPTS_STREAM_CEP_SUM_SQL),
+    (transcripts_stream_join, TRANSCRIPTS_STREAM_JOIN_SQL),
+    (transcripts_stream_neardup_chain, TRANSCRIPTS_STREAM_NEARDUP_CHAIN_SQL),
+]
+
+_MEMBERS: list[tuple[Callable[[SparkSession, str], DataFrame], str]] = [
+    (events_tumbling_hourly, EVENTS_TUMBLING_SQL),
+    (events_sliding_windows, EVENTS_SLIDING_SQL),
+    (events_sessionization, EVENTS_SESSION_SQL),
+    (docs_reward_eval, DOCS_REWARD_SQL),
+    (docs_bleu_eval, DOCS_BLEU_SQL),
+    (docs_lang_id, DOCS_LANG_SQL),
+    (docs_token_stats, DOCS_TOKEN_SQL),
+    (docs_quality_score, DOCS_SCORE_SQL),
+    (docs_fingerprint, DOCS_FP_SQL),
+    (docs_whisper_normalize, DOCS_WHISPER_SQL),
+    (docs_number_words, DOCS_NUMWORD_SQL),
+    (docs_cn_numbers, DOCS_CN_SQL),
+    (docs_cn_textnorm, DOCS_CN_TEXTNORM_SQL),
+    (docs_functional_refine, DOCS_FUNCTIONAL_REFINE_SQL),
+    (events_explode_spans, EVENTS_EXPLODE_SPANS_SQL),
+    (events_frame_samples, EVENTS_FRAME_SAMPLES_SQL),
+    (events_clip_filter, EVENTS_CLIP_FILTER_SQL),
+    (events_span_filter, EVENTS_SPAN_FILTER_SQL),
+    (events_clip_eval, EVENTS_CLIP_EVAL_SQL),
+    (events_motion_score, EVENTS_MOTION_SCORE_SQL),
+    (events_timecodes, EVENTS_TIMECODES_SQL),
+    (transcripts_role_violations, TRANSCRIPTS_ROLE_VIOL_SQL),
+    (transcripts_tool_pairing, TRANSCRIPTS_TOOL_PAIRING_SQL),
+    (docs_qa_parse, DOCS_QA_PARSE_SQL),
+    (docs_templated_prompts, DOCS_TEMPLATED_SQL),
+    (docs_score_filter, DOCS_SCORE_FILTER_SQL),
+    (docs_keep_top_ratio, DOCS_KEEP_TOP_SQL),
+    (docs_clip_score_filter, DOCS_CLIP_SCORE_SQL),
+    (docs_aesthetic_mlp, DOCS_AESTHETIC_MLP_SQL),
+    (events_ctc_align, EVENTS_CTC_ALIGN_SQL),
+    (events_wav_vad, EVENTS_WAV_VAD_SQL),
+]
+
+# one pair per query, keyed by the builder's own name: a query cannot lose
+# its oracle, and QUERIES and ORACLES share one order
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    fn.__name__: fn for fn, _ in _GATED
 }
+ORACLES: dict[str, str] = {fn.__name__: sql for fn, sql in _GATED}
 
 # Member queries folded into suites (still individually runnable via
 # tools/check_correctness.py <sf> <name> for debugging a suite mismatch).
 MEMBER_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "events_tumbling_hourly": events_tumbling_hourly,
-    "events_sliding_windows": events_sliding_windows,
-    "events_sessionization": events_sessionization,
-    "docs_reward_eval": docs_reward_eval,
-    "docs_bleu_eval": docs_bleu_eval,
-    "docs_lang_id": docs_lang_id,
-    "docs_token_stats": docs_token_stats,
-    "docs_quality_score": docs_quality_score,
-    "docs_fingerprint": docs_fingerprint,
-    "docs_whisper_normalize": docs_whisper_normalize,
-    "docs_number_words": docs_number_words,
-    "docs_cn_numbers": docs_cn_numbers,
-    "docs_cn_textnorm": docs_cn_textnorm,
-    "docs_functional_refine": docs_functional_refine,
-    "events_explode_spans": events_explode_spans,
-    "events_frame_samples": events_frame_samples,
-    "events_clip_filter": events_clip_filter,
-    "events_span_filter": events_span_filter,
-    "events_clip_eval": events_clip_eval,
-    "events_motion_score": events_motion_score,
-    "events_timecodes": events_timecodes,
-    "transcripts_role_violations": transcripts_role_violations,
-    "transcripts_tool_pairing": transcripts_tool_pairing,
-    "docs_qa_parse": docs_qa_parse,
-    "docs_templated_prompts": docs_templated_prompts,
-    "docs_score_filter": docs_score_filter,
-    "docs_keep_top_ratio": docs_keep_top_ratio,
-    "docs_clip_score_filter": docs_clip_score_filter,
-    "docs_aesthetic_mlp": docs_aesthetic_mlp,
-    "events_ctc_align": events_ctc_align,
-    "events_wav_vad": events_wav_vad,
+    fn.__name__: fn for fn, _ in _MEMBERS
 }
-
-MEMBER_ORACLES: dict[str, str] = {
-    "events_tumbling_hourly": EVENTS_TUMBLING_SQL,
-    "events_sliding_windows": EVENTS_SLIDING_SQL,
-    "events_sessionization": EVENTS_SESSION_SQL,
-    "docs_reward_eval": DOCS_REWARD_SQL,
-    "docs_bleu_eval": DOCS_BLEU_SQL,
-    "docs_lang_id": DOCS_LANG_SQL,
-    "docs_token_stats": DOCS_TOKEN_SQL,
-    "docs_quality_score": DOCS_SCORE_SQL,
-    "docs_fingerprint": DOCS_FP_SQL,
-    "docs_whisper_normalize": DOCS_WHISPER_SQL,
-    "docs_number_words": DOCS_NUMWORD_SQL,
-    "docs_cn_numbers": DOCS_CN_SQL,
-    "docs_cn_textnorm": DOCS_CN_TEXTNORM_SQL,
-    "docs_functional_refine": DOCS_FUNCTIONAL_REFINE_SQL,
-    "events_explode_spans": EVENTS_EXPLODE_SPANS_SQL,
-    "events_frame_samples": EVENTS_FRAME_SAMPLES_SQL,
-    "events_clip_filter": EVENTS_CLIP_FILTER_SQL,
-    "events_span_filter": EVENTS_SPAN_FILTER_SQL,
-    "events_clip_eval": EVENTS_CLIP_EVAL_SQL,
-    "events_motion_score": EVENTS_MOTION_SCORE_SQL,
-    "events_timecodes": EVENTS_TIMECODES_SQL,
-    "transcripts_role_violations": TRANSCRIPTS_ROLE_VIOL_SQL,
-    "transcripts_tool_pairing": TRANSCRIPTS_TOOL_PAIRING_SQL,
-    "docs_qa_parse": DOCS_QA_PARSE_SQL,
-    "docs_templated_prompts": DOCS_TEMPLATED_SQL,
-    "docs_score_filter": DOCS_SCORE_FILTER_SQL,
-    "docs_keep_top_ratio": DOCS_KEEP_TOP_SQL,
-    "docs_clip_score_filter": DOCS_CLIP_SCORE_SQL,
-    "docs_aesthetic_mlp": DOCS_AESTHETIC_MLP_SQL,
-    "events_ctc_align": EVENTS_CTC_ALIGN_SQL,
-    "events_wav_vad": EVENTS_WAV_VAD_SQL,
-}
-
-ORACLES: dict[str, str] = {
-    "q1_pricing_summary": Q1_SQL,
-    "top_customers_by_revenue": TOP_CUSTOMERS_SQL,
-    "events_windows_suite": EVENTS_WINDOWS_SUITE_SQL,
-    "events_dedup_first": EVENTS_DEDUP_SQL,
-    "events_cep_error_purchase": EVENTS_CEP_SQL,
-    "transcript_prevturn_join": TRANSCRIPT_PREVTURN_SQL,
-    "transcript_messages_flat": TRANSCRIPT_MESSAGES_SQL,
-    "docs_quality_filter": DOCS_QUALITY_SQL,
-    "docs_quality_filter_mutated": DOCS_QUALITY_MUT_SQL,
-    "docs_eval_suite": DOCS_EVAL_SUITE_SQL,
-    "docs_exact_dedup": DOCS_EXACT_DEDUP_SQL,
-    "docs_ngram_neardup": DOCS_NGRAM_NEARDUP_SQL,
-    "docs_minhash_signatures": DOCS_MINHASH_SQL,
-    "docs_minhash_lsh_pairs": DOCS_MINHASH_LSH_SQL,
-    "docs_text_analysis": DOCS_TEXT_ANALYSIS_SQL,
-    "docs_normalize_suite": DOCS_NORMALIZE_SUITE_SQL,
-    "events_merge_spans": EVENTS_MERGE_SPANS_SQL,
-    "events_expansion_suite": EVENTS_EXPANSION_SUITE_SQL,
-    "events_clip_suite": EVENTS_CLIP_SUITE_SQL,
-    "docs_parse_suite": DOCS_PARSE_SUITE_SQL,
-    "emb_cosine_topk": EMB_TOPK_SQL,
-    "emb_cosine_neardup": EMB_NEARDUP_SQL,
-    "emb_knn_avg_sim": EMB_KNN_SQL,
-    "emb_datatailor_select": EMB_DATATAILOR_SQL,
-    "transcripts_contract_suite": TRANSCRIPTS_CONTRACT_SUITE_SQL,
-    "transcripts_sessionization": TRANSCRIPTS_SESSION_SQL,
-    "transcripts_quality_windows": TRANSCRIPTS_QUALITY_WIN_SQL,
-    "docs_simhash_neardup": DOCS_SIMHASH_SQL,
-    "docs_winnow_fingerprints": DOCS_WINNOW_SQL,
-    "emb_ann_lsh_topk": EMB_ANN_SQL,
-    "docs_prompted_qa": DOCS_PROMPTED_QA_SQL,
-    "docs_batch_generate": DOCS_BATCH_GEN_SQL,
-    "docs_rollout_judge": DOCS_ROLLOUT_JUDGE_SQL,
-    "docs_mcts_chains": DOCS_MCTS_SQL,
-    "docs_joint_neardup": DOCS_JOINT_NEARDUP_SQL,
-    "docs_filter_suite": DOCS_FILTER_SUITE_SQL,
-    "docs_visual_dependency": DOCS_VISUAL_DEP_SQL,
-    "docs_image_dims": DOCS_IMAGE_DIMS_SQL,
-    "events_heavy_hitters": EVENTS_HEAVY_HITTERS_SQL,
-    "events_audio_suite": EVENTS_AUDIO_SUITE_SQL,
-    "docs_bmp_pixels": DOCS_BMP_PIXELS_SQL,
-    "transcripts_stream_pipeline": TRANSCRIPTS_STREAM_SQL,
-    "transcripts_stream_windows": TRANSCRIPTS_STREAM_WIN_SQL,
-    "transcripts_stream_cep": TRANSCRIPTS_STREAM_CEP_SQL,
-    "transcripts_stream_sessions": TRANSCRIPTS_STREAM_SESS_SQL,
-    "transcripts_stream_cep_summary": TRANSCRIPTS_STREAM_CEP_SUM_SQL,
-    "transcripts_stream_join": TRANSCRIPTS_STREAM_JOIN_SQL,
-    "events_stream_merge": EVENTS_STREAM_MERGE_SQL,
-    "transcripts_stream_neardup": TRANSCRIPTS_STREAM_NEARDUP_SQL,
-    "transcripts_stream_neardup_chain": TRANSCRIPTS_STREAM_NEARDUP_CHAIN_SQL,
-}
+MEMBER_ORACLES: dict[str, str] = {fn.__name__: sql for fn, sql in _MEMBERS}
 
 
 def entry_query(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

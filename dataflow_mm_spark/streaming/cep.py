@@ -252,7 +252,7 @@ def _role_code(col):
     return c
 
 
-def cep_stream_bucketed(
+def cep_stream(
     turns: DataFrame, close_gap: str = "30 minutes", buckets: int = 64
 ) -> DataFrame:
     """turns (streaming, watermarked on ts) → detection event stream.

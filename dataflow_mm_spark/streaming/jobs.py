@@ -1,9 +1,11 @@
 """End-to-end streaming jobs — the engine's flagship pipelines.
 
 Each job: readStream → watermark → transform → exactly-once sink, resumable
-from its checkpoint dir. ``trigger='availableNow'`` drains all pending input
-and stops (used by tests + bench); a real deployment passes
-``processing_time='10 seconds'`` instead. Shuffle layout: stateful stages key
+from its checkpoint dir. Every job takes one ``trigger``: the default
+``"availableNow"`` drains all pending input and stops (tests, bench, gates);
+a long-running deployment passes a processing-time interval such as
+``"10 seconds"`` (cli.py ``--continuous --trigger-interval``). Every job
+starts through ``_start``. Shuffle layout: stateful stages key
 on conv_id (or window key) — Spark plants the exchange. Ordering rule
 (measured, see CLAUDE.md): stateful dedup runs FIRST on the 6 narrow raw
 columns (the shuffle carries whatever flows through it — dedup on enriched
@@ -21,31 +23,31 @@ from dataflow_mm_spark.functions.extraction import (
     extract_tool_call_names,
 )
 from dataflow_mm_spark.functions.quality import quality_struct
-from dataflow_mm_spark.streaming.cep import cep_stream_bucketed
+from dataflow_mm_spark.streaming.cep import cep_stream
 from dataflow_mm_spark.streaming.dedup import exact_dedup_stream
 from dataflow_mm_spark.streaming.sink import ExactlyOnceParquetSink
 from dataflow_mm_spark.streaming.source import read_transcript_stream
 
-
-def _start(stream_df: DataFrame, sink: ExactlyOnceParquetSink, checkpoint: str,
-           available_now: bool, processing_time: str | None = None):
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch(sink.foreach_batch)
-    )
-    if available_now:
-        w = w.trigger(availableNow=True)
-    elif processing_time:
-        w = w.trigger(processingTime=processing_time)
-    return w.start()
+AVAILABLE_NOW = "availableNow"
 
 
-def _start_native(stream_df: DataFrame, out_dir: str, checkpoint: str,
-                  available_now: bool):
-    """Native parquet streaming sink — the commit protocol is JVM-side
+def _start(df: DataFrame, out_dir: str, checkpoint: str,
+           trigger: str = AVAILABLE_NOW, sink_mode: str = "exactly_once",
+           batch_fn=None):
+    """Start ``df`` as an append-mode query; returns (query, sink).
+
+    ``trigger``: ``"availableNow"`` drains pending input and stops; any
+    other value is a processing-time interval such as ``"10 seconds"``.
+
+    ``sink_mode="exactly_once"`` (production default): foreachBatch
+    ExactlyOnceParquetSink with lineage columns and manifest commit;
+    ``batch_fn`` maps each micro-batch before the sink writes it.
+    ``sink.foreach_batch`` is looked up here, at start time, so a wrapper
+    patched onto the class before the start times every call.
+
+    ``sink_mode="native"``: Spark's parquet streaming sink, sink=None (read
+    the output dir directly). Its commit protocol is JVM-side
     (``_spark_metadata`` log), with NO Python callback on the data path.
-
     Why it exists: py4j's callback channel (the transport behind
     ``foreachBatch``) degrades in long-lived driver sessions that start many
     streaming queries — observed at the 7th foreachBatch query of one
@@ -53,33 +55,23 @@ def _start_native(stream_df: DataFrame, out_dir: str, checkpoint: str,
     pinned connection (stream thread in a plain-socket read that ignores
     interrupts, so even ``stop()`` wedges). Production deployments run one
     query per JVM (cli.py) and never see this; the correctness gate runs
-    8 streaming queries in one session, so gate queries that don't
-    specifically verify the foreachBatch exactly-once sink use this sink
-    instead (``sink_mode="native"``), capping callback-channel usage per
-    session. The foreachBatch sink itself stays gated by
-    transcripts_stream_pipeline / transcripts_stream_neardup, ordered first
-    among the gate's stream queries."""
-    w = (
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
+    9 streaming queries in one session, so gate queries that don't
+    specifically verify the foreachBatch exactly-once sink use this sink,
+    capping callback-channel usage per session. The foreachBatch sink
+    itself stays gated by transcripts_stream_pipeline /
+    transcripts_stream_neardup, ordered first among the gate's stream
+    queries."""
+    w = df.writeStream.outputMode("append").option("checkpointLocation", checkpoint)
+    if trigger == AVAILABLE_NOW:
         w = w.trigger(availableNow=True)
-    return w.start()
-
-
-def _finish(stream_df: DataFrame, out_dir: str, checkpoint: str,
-            available_now: bool, sink_mode: str):
-    """(query, sink) for the requested sink mode: "exactly_once" =
-    foreachBatch ExactlyOnceParquetSink (production default, lineage
-    columns + manifest commit); "native" = JVM-only parquet sink
-    (sink=None — read the output dir directly)."""
+    else:
+        w = w.trigger(processingTime=trigger)
     if sink_mode == "native":
-        return _start_native(stream_df, out_dir, checkpoint, available_now), None
+        return w.format("parquet").option("path", out_dir).start(), None
     sink = ExactlyOnceParquetSink(out_dir)
-    return _start(stream_df, sink, checkpoint, available_now), sink
+    write = sink.foreach_batch
+    fn = write if batch_fn is None else lambda b, bid: write(batch_fn(b), bid)
+    return w.foreachBatch(fn).start(), sink
 
 
 def drain_resumable(start, attempts: int = 2, timeout_s: float = 900.0):
@@ -88,7 +80,7 @@ def drain_resumable(start, attempts: int = 2, timeout_s: float = 900.0):
     checkpoint dir; if ``awaitTermination`` raises (py4j callback-channel
     flakes under long sessions, executor loss on a real cluster) OR the
     drain exceeds ``timeout_s`` (a wedged foreachBatch callback — the py4j
-    callback-channel degradation _start_native documents: the JVM blocks
+    callback-channel degradation _start documents: the JVM blocks
     forever reading a response that never comes), the
     query is stopped and rebuilt on the same checkpoint — the exactly-once
     sink makes the retry idempotent (a replayed batch clobbers its own
@@ -131,7 +123,7 @@ def turns_pipeline(
     checkpoint: str,
     watermark: str = "10 minutes",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     dedup: bool = True,
 ):
     """Quality-scored, deduplicated turn stream → exactly-once sink."""
@@ -151,10 +143,7 @@ def turns_pipeline(
         F.count(F.lit(1)).alias("turns_in"),
         F.sum(F.when(F.col("quality.pass"), 1).otherwise(0)).alias("turns_kept"),
     )
-    filtered = enriched.filter(F.col("quality.pass"))
-    sink = ExactlyOnceParquetSink(out_dir)
-    q = _start(filtered, sink, checkpoint, available_now)
-    return q, sink
+    return _start(enriched.filter(F.col("quality.pass")), out_dir, checkpoint, trigger)
 
 
 def windowed_pipeline(
@@ -165,7 +154,7 @@ def windowed_pipeline(
     watermark: str = "10 minutes",
     window_size: str = "5 minutes",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     sink_mode: str = "exactly_once",
 ):
     """Flagship SURVEY.md §7.2 slice: quality-filtered turn counts per
@@ -191,7 +180,7 @@ def windowed_pipeline(
             "n_assistant",
         )
     )
-    return _finish(agg, out_dir, checkpoint, available_now, sink_mode)
+    return _start(agg, out_dir, checkpoint, trigger, sink_mode)
 
 
 def cep_pipeline(
@@ -202,14 +191,14 @@ def cep_pipeline(
     watermark: str = "10 minutes",
     close_gap: str = "30 minutes",
     max_files_per_trigger: int | None = None,
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     buckets: int = 64,
     sink_mode: str = "exactly_once",
 ):
     """Role-alternation + tool-pairing CEP event stream → sink. The
     per-conversation FSMs live in keyed state grouped as hash(conv_id) %
     ``buckets``, so each micro-batch pays the Python round trip per bucket,
-    not per conversation (see cep_stream_bucketed). ``buckets`` is fixed for
+    not per conversation (see cep_stream). ``buckets`` is fixed for
     the life of a checkpoint.
 
     Deployment note (measured, BENCH.md §2 r4): size ``max_files_per_trigger``
@@ -220,8 +209,8 @@ def cep_pipeline(
     turns = read_transcript_stream(
         spark, input_path, max_files_per_trigger, watermark
     )
-    events = cep_stream_bucketed(turns, close_gap, buckets)
-    return _finish(events, out_dir, checkpoint, available_now, sink_mode)
+    events = cep_stream(turns, close_gap, buckets)
+    return _start(events, out_dir, checkpoint, trigger, sink_mode)
 
 
 def context_pipeline(
@@ -231,7 +220,7 @@ def context_pipeline(
     checkpoint: str,
     watermark: str = "10 minutes",
     max_gap: str = "1 hour",
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     sink_mode: str = "exactly_once",
 ):
     """Stream-stream prev-turn join → stateless consistency features →
@@ -250,7 +239,7 @@ def context_pipeline(
         (F.col("role") == F.col("prev_role")).alias("role_repeat"),
         quality_struct(F.col("text"))["pass"].alias("quality_pass"),
     )
-    return _finish(out, out_dir, checkpoint, available_now, sink_mode)
+    return _start(out, out_dir, checkpoint, trigger, sink_mode)
 
 
 def neardup_pipeline(
@@ -259,7 +248,7 @@ def neardup_pipeline(
     out_dir: str,
     checkpoint: str,
     watermark: str = "10 minutes",
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     resolve: bool = True,
     max_files_per_trigger: int | None = None,
     **neardup_kw,
@@ -281,22 +270,11 @@ def neardup_pipeline(
     turns = read_transcript_stream(
         spark, input_path, max_files_per_trigger, watermark
     )
-    sink = ExactlyOnceParquetSink(out_dir)
     if resolve:
-        stream = neardup_dedup_stream(turns, **neardup_kw)
-        w = (
-            stream.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint)
-            .foreachBatch(
-                lambda df, bid: sink.foreach_batch(decisions_from_batch(df), bid)
-            )
-        )
-        if available_now:
-            w = w.trigger(availableNow=True)
-        return w.start(), sink
-    cands = neardup_candidates_stream(turns, **neardup_kw)
-    q = _start(cands, sink, checkpoint, available_now)
-    return q, sink
+        return _start(neardup_dedup_stream(turns, **neardup_kw), out_dir,
+                      checkpoint, trigger, batch_fn=decisions_from_batch)
+    return _start(neardup_candidates_stream(turns, **neardup_kw), out_dir,
+                  checkpoint, trigger)
 
 
 def merge_spans_pipeline(
@@ -307,7 +285,7 @@ def merge_spans_pipeline(
     watermark: str = "10 minutes",
     close_gap: str = "30 minutes",
     max_duration: float = 30.0,
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     sink_mode: str = "exactly_once",
 ):
     """W6 merge mode, streaming form: size-capped span merge per conversation
@@ -323,7 +301,7 @@ def merge_spans_pipeline(
         .withWatermark("ts", watermark)
     )
     merged = merge_spans_stream(raw, close_gap=close_gap, max_duration=max_duration)
-    return _finish(merged, out_dir, checkpoint, available_now, sink_mode)
+    return _start(merged, out_dir, checkpoint, trigger, sink_mode)
 
 
 def sessionized_pipeline(
@@ -333,7 +311,7 @@ def sessionized_pipeline(
     checkpoint: str,
     watermark: str = "10 minutes",
     gap: str = "30 minutes",
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     sink_mode: str = "exactly_once",
 ):
     """Native session_window aggregation per conversation."""
@@ -348,7 +326,7 @@ def sessionized_pipeline(
             "n_turns",
         )
     )
-    return _finish(agg, out_dir, checkpoint, available_now, sink_mode)
+    return _start(agg, out_dir, checkpoint, trigger, sink_mode)
 
 
 def asset_info_pipeline(
@@ -356,7 +334,7 @@ def asset_info_pipeline(
     input_path: str,
     out_dir: str,
     checkpoint: str,
-    available_now: bool = True,
+    trigger: str = AVAILABLE_NOW,
     sink_mode: str = "exactly_once",
     bin_col: str = "payload",
     id_col: str = "doc_id",
@@ -387,4 +365,4 @@ def asset_info_pipeline(
     )
     info = video_info(meta, bin_col=bin_col,
                       id_cols=(id_col, "mime", "n_bytes", "sha256"))
-    return _finish(info, out_dir, checkpoint, available_now, sink_mode)
+    return _start(info, out_dir, checkpoint, trigger, sink_mode)

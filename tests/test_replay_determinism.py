@@ -28,7 +28,7 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path):
     # interrupted run: stop the query after the first committed batch
     out_a, ck_a = str(tmp_path / "out_a"), str(tmp_path / "ck_a")
     q, sink_a = jobs.windowed_pipeline(
-        spark, inp, out_a, ck_a, max_files_per_trigger=1, available_now=True
+        spark, inp, out_a, ck_a, max_files_per_trigger=1
     )
     deadline = time.time() + 120
     while time.time() < deadline and not sink_a.committed_batches():
@@ -39,14 +39,14 @@ def test_kill_and_resume_equals_single_run(spark, tmp_path):
 
     # resume from the same checkpoint to completion
     q2, sink_a2 = jobs.windowed_pipeline(
-        spark, inp, out_a, ck_a, max_files_per_trigger=1, available_now=True
+        spark, inp, out_a, ck_a, max_files_per_trigger=1
     )
     q2.awaitTermination(300)
 
     # uninterrupted single run
     out_b, ck_b = str(tmp_path / "out_b"), str(tmp_path / "ck_b")
     q3, sink_b = jobs.windowed_pipeline(
-        spark, inp, out_b, ck_b, max_files_per_trigger=1, available_now=True
+        spark, inp, out_b, ck_b, max_files_per_trigger=1
     )
     q3.awaitTermination(300)
 

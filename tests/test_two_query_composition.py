@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from dataflow_mm_spark.datagen import transcripts
 from dataflow_mm_spark.streaming import jobs
-from dataflow_mm_spark.streaming.cep import cep_stream_bucketed
+from dataflow_mm_spark.streaming.cep import cep_stream
 from dataflow_mm_spark.streaming.sink import ExactlyOnceParquetSink
 
 
@@ -44,7 +44,7 @@ def test_join_then_cep_two_queries(spark, tmp_path):
         # 0 so the CEP contiguous-prefix FSM consumes them
         .withColumn("turn_idx", (F.col("turn_idx") - 1).cast("int"))
     )
-    events = cep_stream_bucketed(ctx_stream, close_gap="30 minutes", buckets=16)
+    events = cep_stream(ctx_stream, close_gap="30 minutes", buckets=16)
     out, ck2 = str(tmp_path / "out"), str(tmp_path / "ck2")
     sink2 = ExactlyOnceParquetSink(out)
     q2 = (

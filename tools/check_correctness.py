@@ -103,13 +103,6 @@ def main() -> int:
             record(name, status="spark_error", err=traceback.format_exc(limit=20),
                    sec=round(time.time() - t0, 2))
             continue
-        if name not in os_:
-            print(f"okR  {name}: rows={len(sdf)} (rows-only) {time.time()-t0:.1f}s")
-            if len(sdf) == 0:
-                print(f"  WARN {name}: zero rows")
-            record(name, status="rows_only", spark_rows=len(sdf),
-                   sec=round(time.time() - t0, 2))
-            continue
         try:
             odf = con.execute(os_[name]).fetchdf()
         except Exception as ex:  # noqa: BLE001
